@@ -186,6 +186,26 @@ def time_suite(spark, names, sf_dir: str, passes: int, queries) -> dict[str, flo
     return timings
 
 
+def codegen_health(spark) -> dict:
+    """The codegen cache's bound, the Janino compiles this JVM has made
+    and the memory compiled classes live in (MB). Compiles in the
+    thousands over two passes mean the cache is thrashing again."""
+    from flink_spark.session import janino_compiles
+
+    beans = spark._jvm.java.lang.management.ManagementFactory
+    used = {p.getName(): p.getUsage().getUsed()
+            for p in beans.getMemoryPoolMXBeans()}
+    code_heap = sum(v for k, v in used.items() if k.startswith("CodeHeap"))
+    return {
+        "cache_max_entries": int(
+            spark.conf.get("spark.sql.codegen.cache.maxEntries")
+        ),
+        "janino_compiles": janino_compiles(spark),
+        "metaspace_mb": round(used.get("Metaspace", 0) / 2 ** 20, 1),
+        "code_heap_mb": round(code_heap / 2 ** 20, 1),
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -235,6 +255,7 @@ def main() -> None:
         "extra": extra,
         "extra_sec": round(sum(extra.values()), 4),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf_dir,
+        "codegen": codegen_health(spark),
     }
     print(json.dumps(out))
     # The driver records only a ~2000-char tail of stdout; the full line

@@ -18,6 +18,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from flink_spark.localrows import rows_df
 from flink_spark.session import prepare_session
 from flink_spark.sqltok import det_digest as _det_digest
 from flink_spark.sqltok import match_paren as _match_paren
@@ -380,8 +381,8 @@ class TableEnvironment:
                 )
                 for f in schema.fields
             ]
-        return self.spark.createDataFrame(
-            rows,
+        return rows_df(
+            self.spark, rows,
             "name string, type string, null boolean, key string, "
             "extras string, watermark string",
         )
@@ -516,8 +517,8 @@ class TableEnvironment:
             self.spark.udf.register(name, _dropped)
             return None
         if self._FN_SHOW_RE.match(stmt):
-            return self.spark.createDataFrame(
-                [(n,) for n in sorted(self.user_functions)],
+            return rows_df(
+                self.spark, [(n,) for n in sorted(self.user_functions)],
                 "function_name string",
             )
         dm = re.match(
@@ -557,8 +558,8 @@ class TableEnvironment:
                     "signature",
                     f"{name}(...)",
                 ))
-            return self.spark.createDataFrame(
-                rows, "`info name` string, `info value` string"
+            return rows_df(
+                self.spark, rows, "`info name` string, `info value` string"
             )
         return NotImplemented
 
@@ -681,8 +682,8 @@ class TableEnvironment:
                         walk(_os.path.join(d, e), depth + 1, rel + [e])
 
             walk(base, 0, [])
-            return self.spark.createDataFrame(
-                [(p,) for p in parts], "partition string"
+            return rows_df(
+                self.spark, [(p,) for p in parts], "partition string"
             )
         m = self._ALTER_PART_RE.match(stmt)
         if m and m.group("name") in self.tables:
@@ -2222,8 +2223,8 @@ class TableEnvironment:
                     for k, v in sorted(props.items())
                 )
                 lines.append("WITH (\n" + body + "\n)")
-            return self.spark.createDataFrame(
-                [("\n".join(lines),)], "ddl string"
+            return rows_df(
+                self.spark, [("\n".join(lines),)], "ddl string"
             )
         m = re.match(
             r"^\s*DROP\s+CATALOG\s+(?P<ie>IF\s+EXISTS\s+)?(?P<n>\w+)\s*$",
@@ -2250,12 +2251,14 @@ class TableEnvironment:
             self._load_persisted_tables()
             return None
         if re.match(r"^\s*SHOW\s+CATALOGS\s*$", stmt, re.IGNORECASE):
-            return self.spark.createDataFrame(
-                sorted((n,) for n in self.catalogs), "catalog_name string"
+            return rows_df(
+                self.spark, sorted((n,) for n in self.catalogs),
+                "catalog_name string"
             )
         if re.match(r"^\s*SHOW\s+CURRENT\s+CATALOG\s*$", stmt, re.IGNORECASE):
-            return self.spark.createDataFrame(
-                [(self.current_catalog,)], "current_catalog_name string"
+            return rows_df(
+                self.spark, [(self.current_catalog,)],
+                "current_catalog_name string"
             )
         m = re.match(
             r"^\s*DESCRIBE\s+CATALOG\s+(?:EXTENDED\s+)?(?P<n>\w+)\s*$",
@@ -2267,8 +2270,8 @@ class TableEnvironment:
             rows = [("name", m.group("n"))] + sorted(
                 self.catalogs[m.group("n")].items()
             )
-            return self.spark.createDataFrame(
-                rows, "info_name string, info_value string"
+            return rows_df(
+                self.spark, rows, "info_name string, info_value string"
             )
         m = re.match(
             r"^\s*(?P<verb>CREATE|DROP)\s+DATABASE\s+"
@@ -2322,16 +2325,16 @@ class TableEnvironment:
             else:
                 pre = f"{self.current_catalog}__"
                 names = [d[len(pre):] for d in dbs if d.startswith(pre)]
-            return self.spark.createDataFrame(
-                sorted((n,) for n in names), "database_name string"
+            return rows_df(
+                self.spark, sorted((n,) for n in names), "database_name string"
             )
         if re.match(r"^\s*SHOW\s+CURRENT\s+DATABASE\s*$", stmt, re.IGNORECASE):
             cur = self.spark.catalog.currentDatabase()
             pre = f"{self.current_catalog}__"
             if cur.startswith(pre):
                 cur = cur[len(pre):]
-            return self.spark.createDataFrame(
-                [(cur,)], "current_database_name string"
+            return rows_df(
+                self.spark, [(cur,)], "current_database_name string"
             )
         m = re.match(r"^\s*USE\s+(?P<n>\w+)\s*$", stmt, re.IGNORECASE)
         if m and m.group("n").upper() not in ("CATALOG", "MODULES"):
@@ -2511,19 +2514,19 @@ class TableEnvironment:
                     .filter(f"({cond}) IS NOT TRUE")
                 )
                 self._rewrite_partitions(spec, keep_sub, combos)
-            return self.spark.createDataFrame(
-                [(removed,)], "rows_affected bigint"
+            return rows_df(
+                self.spark, [(removed,)], "rows_affected bigint"
             )
         if cond is None:
-            keep = self.spark.createDataFrame([], spec.ddl_schema())
+            keep = rows_df(self.spark, [], spec.ddl_schema())
             removed = df.count()
         else:
             keep = df.filter(f"({cond}) IS NOT TRUE")
             keep = keep.localCheckpoint(eager=True)
             removed = df.filter(cond).count()
         self._rewrite_table_storage(spec, keep)
-        return self.spark.createDataFrame(
-            [(removed,)], "rows_affected bigint"
+        return rows_df(
+            self.spark, [(removed,)], "rows_affected bigint"
         )
 
     def _row_level_update(self, name: str, sets: str, cond: str | None):
@@ -2578,13 +2581,13 @@ class TableEnvironment:
                     .select(*_patch_cols())
                 )
                 self._rewrite_partitions(spec, patched_sub, combos)
-            return self.spark.createDataFrame(
-                [(affected,)], "rows_affected bigint"
+            return rows_df(
+                self.spark, [(affected,)], "rows_affected bigint"
             )
         patched = df.select(*_patch_cols()).localCheckpoint(eager=True)
         self._rewrite_table_storage(spec, patched)
-        return self.spark.createDataFrame(
-            [(affected,)], "rows_affected bigint"
+        return rows_df(
+            self.spark, [(affected,)], "rows_affected bigint"
         )
 
     # -- CALL procedures (reference call.md, SqlCallProcedure + the
@@ -2735,7 +2738,7 @@ class TableEnvironment:
         if isinstance(result, DataFrame):
             return result
         rows, schema = result
-        return self.spark.createDataFrame(rows, schema)
+        return rows_df(self.spark, rows, schema)
 
     def execute_sql(self, sql: str):
         stmt = sql.strip().rstrip(";")
@@ -2782,8 +2785,9 @@ class TableEnvironment:
                     )
                 jars.remove(path)
                 return None
-            return self.spark.createDataFrame(
-                [(j,) for j in getattr(self, "_jars", [])], "jars string"
+            return rows_df(
+                self.spark, [(j,) for j in getattr(self, "_jars", [])],
+                "jars string"
             )
         cm = re.match(
             r"^\s*CALL\s+(?P<name>[\w.]+)\s*\((?P<args>.*)\)\s*$",
@@ -2797,8 +2801,8 @@ class TableEnvironment:
                 set(self._builtin_procedures())
                 | set(getattr(self, "_procedures", {}))
             )
-            return self.spark.createDataFrame(
-                [(n,) for n in names], "procedure_name string"
+            return rows_df(
+                self.spark, [(n,) for n in names], "procedure_name string"
             )
         if re.match(r"^\s*SHOW\s+TABLES\s*$", stmt, re.IGNORECASE):
             # SHOW TABLES must list every CATALOG table (reference
@@ -2812,7 +2816,7 @@ class TableEnvironment:
             ]
             if missing:
                 base = base.unionByName(
-                    self.spark.createDataFrame(missing, base.schema)
+                    rows_df(self.spark, missing, base.schema)
                 )
             return base
         shm = re.match(
@@ -3150,8 +3154,8 @@ class TableEnvironment:
                     "== Physical Execution Plan ==\n"
                     + json_execution_plan(df)
                 )
-            return self.spark.createDataFrame(
-                [("\n\n".join(sections),)], "result string"
+            return rows_df(
+                self.spark, [("\n\n".join(sections),)], "result string"
             )
         if "ESTIMATED_COST" in up:
             # EXPLAIN ESTIMATED_COST (reference ExplainDetail
@@ -3164,8 +3168,8 @@ class TableEnvironment:
             if em:
                 df = self.spark.sql(em.group("q"))
                 txt = df._jdf.queryExecution().stringWithStats()
-                return self.spark.createDataFrame(
-                    [(txt,)], "plan_with_stats string"
+                return rows_df(
+                    self.spark, [(txt,)], "plan_with_stats string"
                 )
         if "CHANGELOG_MODE" in up:
             # EXPLAIN CHANGELOG_MODE <query> (reference ExplainDetail.java:36
@@ -3190,8 +3194,8 @@ class TableEnvironment:
                     if s.primary_key
                 }
                 txt = _cm_explain(ir_from_analyzed(plan_text, pk_tables))
-                return self.spark.createDataFrame(
-                    [(txt,)], "changelog_plan string"
+                return rows_df(
+                    self.spark, [(txt,)], "changelog_plan string"
                 )
         if "JSON_EXECUTION_PLAN" in up:
             # EXPLAIN JSON_EXECUTION_PLAN <query> (reference
@@ -3206,8 +3210,9 @@ class TableEnvironment:
                 from flink_spark.plan_advice import json_execution_plan
 
                 df = self.spark.sql(em.group("q"))
-                return self.spark.createDataFrame(
-                    [(json_execution_plan(df),)], "json_execution_plan string"
+                return rows_df(
+                    self.spark, [(json_execution_plan(df),)],
+                    "json_execution_plan string"
                 )
         if "PLAN_ADVICE" in up:
             # EXPLAIN PLAN_ADVICE <query> (reference ExplainDetail
@@ -3317,11 +3322,13 @@ class TableEnvironment:
             )
             if m:
                 if m.group("full"):
-                    return self.spark.createDataFrame(
-                        self.modules, "module_name string, used boolean"
+                    return rows_df(
+                        self.spark, self.modules,
+                        "module_name string, used boolean"
                     )
-                return self.spark.createDataFrame(
-                    [(n,) for n, u in self.modules if u], "module_name string"
+                return rows_df(
+                    self.spark, [(n,) for n, u in self.modules if u],
+                    "module_name string"
                 )
         if "CONNECTION" in up:
             r = self.connection_manager.handle(stmt)
@@ -3385,8 +3392,8 @@ class TableEnvironment:
                         for k, v in sorted(spec.options.items())
                     )
                     lines.append("WITH (\n" + body + "\n)")
-                return self.spark.createDataFrame(
-                    [("\n".join(lines),)], "ddl string"
+                return rows_df(
+                    self.spark, [("\n".join(lines),)], "ddl string"
                 )
             dmm = re.match(
                 r"^\s*(?:DESCRIBE|DESC)\s+MODEL\s+(?:(?P<ext>EXTENDED)\s+)?"
@@ -3416,14 +3423,14 @@ class TableEnvironment:
                             rows.append(
                                 (toks[0], toks[1].upper(), True, is_input)
                             )
-                out = self.spark.createDataFrame(
-                    rows,
+                out = rows_df(
+                    self.spark, rows,
                     "name string, type string, `null` boolean, "
                     "`is input` boolean",
                 )
                 if dmm.group("ext"):
-                    opts = self.spark.createDataFrame(
-                        [(f"option:{k}", str(v), True, False)
+                    opts = rows_df(
+                        self.spark, [(f"option:{k}", str(v), True, False)
                          for k, v in sorted(spec.options.items())],
                         out.schema,
                     )
@@ -3544,8 +3551,8 @@ class TableEnvironment:
                 lines.append(f"FRESHNESS = INTERVAL '{fstr}' SECOND")
                 lines.append(f"REFRESH_MODE = {mt.refresh_mode.upper()}")
                 lines.append(f"AS {mt.as_query}")
-                return self.spark.createDataFrame(
-                    [("\n".join(lines),)], "ddl string"
+                return rows_df(
+                    self.spark, [("\n".join(lines),)], "ddl string"
                 )
             from flink_spark.materialized import extract_schema_block
 
@@ -3871,8 +3878,9 @@ class TableEnvironment:
                 (q.id, q.name or "", "RUNNING" if q.isActive else "FINISHED")
                 for q in self.spark.streams.active
             ]
-            return self.spark.createDataFrame(
-                rows, "job_id string, job_name string, status string"
+            return rows_df(
+                self.spark, rows,
+                "job_id string, job_name string, status string"
             )
         dj = re.match(
             r"^\s*DESCRIBE\s+JOB\s+'(?P<jid>[^']+)'\s*$", stmt, re.IGNORECASE
@@ -3882,8 +3890,8 @@ class TableEnvironment:
             for q in self.spark.streams.active:
                 if q.id == dj.group("jid") or (q.name or "") == dj.group("jid"):
                     lp = q.lastProgress or {}
-                    return self.spark.createDataFrame(
-                        [(
+                    return rows_df(
+                        self.spark, [(
                             q.id, q.name or "",
                             "RUNNING" if q.isActive else "FINISHED",
                             str(lp.get("batchId", "")),
@@ -4048,7 +4056,7 @@ class TableEnvironment:
             if d["comment"] is not None:
                 parts.append(f"COMMENT '{d['comment']}'")
             ddl = " ".join(parts) + f" AS {d['query']}"
-            return self.spark.createDataFrame([(ddl,)], "ddl string")
+            return rows_df(self.spark, [(ddl,)], "ddl string")
         sct = re.match(
             r"^\s*SHOW\s+CREATE\s+TABLE\s+(?P<name>[\w.]+)\s*$",
             stmt,
@@ -4087,7 +4095,7 @@ class TableEnvironment:
                 f"CREATE TABLE {spec.name} ({', '.join(body)}){dist} "
                 f"WITH ({opts})"
             )
-            return self.spark.createDataFrame([(ddl,)], "ddl string")
+            return rows_df(self.spark, [(ddl,)], "ddl string")
         tr = re.match(
             r"^\s*TRUNCATE\s+TABLE\s+(?P<name>[\w.]+)\s*$", stmt, re.IGNORECASE
         )
@@ -4102,12 +4110,12 @@ class TableEnvironment:
                 )
             if self._is_managed_bucketed(spec):
                 self._rewrite_table_storage(
-                    spec, self.spark.createDataFrame([], spec.ddl_schema())
+                    spec, rows_df(self.spark, [], spec.ddl_schema())
                 )
                 return None
             _shutil.rmtree(spec.options["path"], ignore_errors=True)
-            self.spark.createDataFrame(
-                [], spec.ddl_schema()
+            rows_df(
+                self.spark, [], spec.ddl_schema()
             ).createOrReplaceTempView(spec.name)
             return None
         an = re.match(
@@ -4502,7 +4510,7 @@ class TableEnvironment:
             from flink_spark.sources.bucketing import write_bucketed
 
             dcols, nbuck = distributed
-            empty = self.spark.createDataFrame([], spec.ddl_schema())
+            empty = rows_df(self.spark, [], spec.ddl_schema())
             write_bucketed(empty, name, dcols, nbuck)
         if not temporary:
             # TEMPORARY tables are session-scoped (reference
@@ -4542,12 +4550,28 @@ class TableEnvironment:
                  or spec.options.get("managed") == "true")
         )
 
+    @staticmethod
+    def _unwritten_local_path(path: str) -> bool:
+        """True when ``path`` is an absolute local path (``file:`` or no
+        scheme) that does not exist. Remote schemes, relative paths and
+        glob patterns answer False: the JVM reader resolves those."""
+        import os
+        from urllib.parse import urlparse
+
+        if any(c in path for c in "*?[{"):
+            return False
+        url = urlparse(path)
+        local = url.path if url.scheme == "file" else path
+        if url.scheme not in ("", "file") or not os.path.isabs(local):
+            return False
+        return not os.path.exists(local)
+
     def _source_df(self, spec: TableSpec) -> DataFrame | None:
         conn = spec.connector
         schema = spec.ddl_schema()
         if conn == "filesystem" and self._is_managed_bucketed(spec):
             if not self.spark.catalog.tableExists(spec.name):
-                return self.spark.createDataFrame([], schema)
+                return rows_df(self.spark, [], schema)
             return self.spark.table(spec.name)
         if conn == "filesystem":
             fmt = spec.options.get("format", "parquet")
@@ -4566,9 +4590,16 @@ class TableEnvironment:
 
                 (kc, kt), (vc, vt) = spec.columns
                 if not os.path.isdir(path):
-                    return self.spark.createDataFrame([], schema)
+                    return rows_df(self.spark, [], schema)
                 return read_sequence_file(
                     self.spark, path, kc, vc, kt.lower(), vt.lower()
+                )
+            if self._unwritten_local_path(path):
+                # sink path not written yet: answer in Python what the
+                # JVM reader would (PATH_NOT_FOUND, converted through
+                # py4j); callers treat both as a sink-only table
+                raise FileNotFoundError(
+                    f"table {spec.name!r}: path {path} is not written yet"
                 )
             reader = self.spark.read.format(fmt).schema(schema)
             if fmt == "csv" and spec.options.get(
@@ -4580,7 +4611,7 @@ class TableEnvironment:
             data = spec.options.get("data", "")
             rows = [tuple(x.strip() for x in r.split("|")) for r in data.split(";") if r]
             names = [c for c, _ in spec.columns]
-            raw = self.spark.createDataFrame(rows, schema=names)
+            raw = rows_df(self.spark, rows, schema=names)
             from pyspark.sql import functions as F
 
             return raw.select(

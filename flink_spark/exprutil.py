@@ -39,6 +39,8 @@ carry no -0.0 on the test corpus.)
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,10 +51,17 @@ _LIT_MEMO: dict[str, Column] = {}
 
 def _d_suffix_sql(value) -> str:
     """``value`` (arbitrarily nested lists of floats) as a SQL array
-    literal with ``D``-suffixed elements."""
+    literal with ``D``-suffixed elements. Infinities and NaN have no
+    such literal (``infD`` parses as a column name), so they raise here
+    instead of failing later as an unresolved column."""
     if isinstance(value, (list, tuple)):
         return "array(" + ",".join(_d_suffix_sql(x) for x in value) + ")"
-    return f"{float(value)!r}D"
+    x = float(value)
+    if not math.isfinite(x):
+        raise ValueError(
+            f"double_array_lit: non-finite value {x!r} has no SQL literal"
+        )
+    return f"{x!r}D"
 
 
 def double_array_lit(spark: SparkSession, value) -> Column:

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from flink_spark.localrows import rows_df
 from flink_spark.queries.registry import query
 from flink_spark.queries.util import DEC
 from flink_spark.sources.tables import load_table
@@ -262,7 +263,7 @@ def ddl_catalog_module_roundtrip(spark, sf_dir):
         rows.append(("database", r.database_name))
     for r in env.execute_sql("SHOW MODULES").collect():
         rows.append(("module", r.module_name))
-    out = spark.createDataFrame(rows, "kind string, name string")
+    out = rows_df(spark, rows, "kind string, name string")
     env.execute_sql("USE CATALOG default_catalog")
     return out
 
@@ -297,7 +298,7 @@ def explain_plan_advice_gate(spark, sf_dir):
     )
     rows = [("clean_advice_rows", str(clean.count()))]
     rows += [("bad_plan_rule", r) for r in sorted({x.rule for x in bad.collect()})]
-    return spark.createDataFrame(rows, "kind string, val string")
+    return rows_df(spark, rows, "kind string, val string")
 
 
 @query(
@@ -351,7 +352,7 @@ def ddl_alter_partition_roundtrip(spark, sf_dir):
         )
         env.execute_sql("ALTER TABLE alter_nat SET ('compression'='snappy')")
         rows.append(("option", env.tables["alter_nat"].options["compression"]))
-        return spark.createDataFrame(rows, "kind string, val string")
+        return rows_df(spark, rows, "kind string, val string")
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -650,8 +651,9 @@ def explain_changelog_mode_gate(spark, sf_dir):
             rows.append(("sql_pk_source_agg", i, name, mode.rstrip("])")))
     finally:
         env.execute_sql("DROP TABLE IF EXISTS cmq_accounts")
-    return spark.createDataFrame(
-        rows, "pipeline string, ord int, node string, changelog_mode string"
+    return rows_df(
+        spark, rows,
+        "pipeline string, ord int, node string, changelog_mode string"
     )
 
 
@@ -704,7 +706,7 @@ def join_hints_gate(spark, sf_dir):
         rows.append(("NEST_LOOP", "BroadcastNestedLoopJoin_or_Cartesian"))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    return spark.createDataFrame(rows, "hint string, join_node string")
+    return rows_df(spark, rows, "hint string, join_node string")
 
 
 @query(
@@ -1303,8 +1305,9 @@ def ddl_watermark_strategies(spark, sf_dir):
         env2.execute_sql(ddl.replace(name, f"{name}_rt"))
         clone = env2.tables[f"{name}_rt"]
         rows.append((name, clone.watermark_kind, *clone.watermark))
-    return spark.createDataFrame(
-        sorted(rows), "tbl string, kind string, wm_col string, delay string"
+    return rows_df(
+        spark, sorted(rows),
+        "tbl string, kind string, wm_col string, delay string"
     )
 
 

@@ -20,6 +20,24 @@ local mode):
   - nanosAsLong: the events table carries parquet TIMESTAMP(NANOS) which the
     vectorized reader rejects; we read the raw int64 and convert to
     TIMESTAMP_NTZ JVM-side (see sources/tables.py) — no Python in the path.
+  - Codegen cache bound (``spark.sql.codegen.cache.maxEntries``, default
+    100): the JVM keeps each Janino-compiled generated class in one LRU
+    cache keyed on its source. One pass over bench.py's HEADLINE + EXTRA
+    (86 queries, sf0.1, local[4]) compiles 1646 distinct classes; the
+    perfbench ``batch_sql`` mix alone compiles 132 and ``stream_drain``
+    108. At 100 entries a mix that repeats in a cycle misses on every
+    pass: the second 86-query pass recompiled 1936 classes, each warm
+    ``batch_sql`` pass 128-129 and each warm ``stream_drain`` pass 55. At
+    :data:`CODEGEN_CACHE_ENTRIES` (twice the 1646) those warm passes
+    compile 0-4 and 1, and the second and third 86-query passes 52 and
+    22: classes whose source differs from run to run (constants inlined
+    per drain or per batch), which the LRU evicts first. Memory after one 86-query pass (4-core VM, 3 GB heap):
+    Metaspace 214 MB and code heap 130 MB of its 240 MB reservation,
+    against 204 MB and 116 MB at 100 entries; after the third pass
+    219 MB and 151 MB.
+  - A session we did not build keeps Spark's 100 entries: the
+    bound is a static conf, read once when the JVM's code generator
+    initializes, so ``prepare_session`` cannot raise it.
 """
 
 from __future__ import annotations
@@ -27,6 +45,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: Compiled generated classes kept per JVM: twice the 1646 distinct
+#: classes one pass over bench.py's 86 queries compiles (Scale notes).
+CODEGEN_CACHE_ENTRIES = 3300
 
 # Conf that is runtime-settable on an existing session (all spark.sql.*).
 RUNTIME_CONF: dict[str, str] = {
@@ -99,9 +121,17 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.python.daemon.module", "flink_spark.pydaemon")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in RUNTIME_CONF.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return prepare_session(spark)
+
+
+def janino_compiles(spark: SparkSession) -> int:
+    """Generated classes Janino has compiled in this JVM so far: each one
+    is a miss in the codegen cache."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

@@ -371,7 +371,7 @@ def delta_join(
         if not persistent:
             # all-empty result: still prune the temp root — the stores
             # hold full copies of both inputs
-            shutil.rmtree(root, ignore_errors=True)
+            storeutil.remove_root(root)
         return spark.createDataFrame([], empty)
     if persistent:
         # durable root: leave stores/out/checkpoint in place for resume
@@ -381,7 +381,7 @@ def delta_join(
         storeutil.read_store(spark, out_dir).drop("__dj_bid")
         .localCheckpoint(eager=True)
     )
-    shutil.rmtree(root, ignore_errors=True)
+    storeutil.remove_root(root)
     return result
 
 
@@ -600,7 +600,7 @@ def delta_join_outer(
     if not _has_parquet(out_dir):
         from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-        shutil.rmtree(root, ignore_errors=True)
+        storeutil.remove_root(root)
         # build the empty schema in left_cols+right_cols order so the
         # empty and non-empty paths agree on column order
         by_name = {f.name: f for f in tagged.schema.fields}
@@ -610,7 +610,7 @@ def delta_join_outer(
         )
         return spark.createDataFrame([], empty)
     result = spark.read.parquet(out_dir).localCheckpoint(eager=True)
-    shutil.rmtree(root, ignore_errors=True)
+    storeutil.remove_root(root)
     return result
 
 

@@ -207,7 +207,7 @@ def aligned_union_trace(
     import shutil
     import tempfile
 
-    from flink_spark.streaming.storeutil import read_store
+    from flink_spark.streaming.storeutil import read_store, remove_root
 
     spark = stream.sparkSession
     drift_td = pd.Timedelta(max_drift)
@@ -326,5 +326,5 @@ def aligned_union_trace(
     out = spark.createDataFrame(
         state["trace"], f"batch_id long, {cols}, combined_max timestamp_ntz"
     )
-    shutil.rmtree(root, ignore_errors=True)
+    remove_root(root)
     return out

@@ -37,8 +37,22 @@ BID = "__bid"
 #: micro-batch read (guide §1.2/§6 — the same declared-schema-catalog
 #: discipline sources/tables.py applies to source tables). Keyed on the
 #: exact path: tmp roots are mkdtemp-unique and durable roots keep their
-#: schema across drains by the resume contract.
+#: schema across drains by the resume contract. A tmp root's entries are
+#: never hit again once the root is gone, so :func:`remove_root` drops
+#: them with it; the memo then holds only live and durable stores.
 _SCHEMA_MEMO: dict[str, object] = {}
+
+
+def remove_root(root: str) -> None:
+    """Delete an operator's tmp state root and forget the memoized
+    schemas of the stores under it."""
+    shutil.rmtree(root, ignore_errors=True)
+    prefix = os.path.join(root, "")
+    # list() snapshots the keys in one step: drains on other threads may
+    # fill the memo meanwhile
+    for key in list(_SCHEMA_MEMO):
+        if key == root or key.startswith(prefix):
+            _SCHEMA_MEMO.pop(key, None)
 
 
 def read_store(
@@ -231,13 +245,13 @@ def collect_out(
     eagerly (localCheckpoint) and pruned."""
     if not has_parquet(out_dir):
         if not persistent:
-            shutil.rmtree(root, ignore_errors=True)
+            remove_root(root)
         return spark.createDataFrame([], schema)
     out = read_store(spark, out_dir).select(*cols)
     if persistent:
         return out
     result = out.localCheckpoint(eager=True)
-    shutil.rmtree(root, ignore_errors=True)
+    remove_root(root)
     return result
 
 

@@ -2638,3 +2638,48 @@ def test_lookup_hint_keeps_sibling_hints(spark):
         ).first().c == 50
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_fresh_sink_path_round_trip_raises_no_jvm_exception(
+    spark, tmp_path, monkeypatch
+):
+    """CREATE, INSERT and SELECT on a path nobody has written yet: the
+    sink-only check is answered in Python, so no JVM exception is raised
+    and converted through py4j (plain and PRIMARY KEY'd sinks), and the
+    rows read back are the rows written."""
+    from pyspark.errors.exceptions import captured
+
+    converted = []
+    real = captured.convert_exception
+
+    def spy(e):
+        converted.append(real(e))
+        return converted[-1]
+
+    monkeypatch.setattr(captured, "convert_exception", spy)
+    env = TableEnvironment(spark)
+    for name, pk in (("fresh_plain", ""),
+                     ("fresh_pk", ", PRIMARY KEY (id) NOT ENFORCED")):
+        env.execute_sql(f"""
+            CREATE TABLE {name} (id BIGINT, v STRING{pk})
+            WITH ('connector'='filesystem','format'='parquet',
+                  'path'='{tmp_path}/{name}')
+        """)
+        env.execute_sql(f"INSERT INTO {name} SELECT id, 'v' || id FROM range(3)")
+        got = sorted(
+            (r.id, r.v)
+            for r in env.execute_sql(f"SELECT id, v FROM {name}").collect()
+        )
+        assert got == [(0, "v0"), (1, "v1"), (2, "v2")]
+    assert converted == []
+
+
+def test_unwritten_local_path_check_leaves_remote_and_globs_to_jvm(tmp_path):
+    check = TableEnvironment._unwritten_local_path
+    assert check(str(tmp_path / "missing"))
+    assert check(f"file://{tmp_path}/missing")
+    assert not check(str(tmp_path))
+    assert not check(f"file:{tmp_path}")
+    assert not check("s3a://bucket/missing")
+    assert not check(f"{tmp_path}/missing/*.parquet")
+    assert not check("relative/missing")

@@ -5,6 +5,7 @@ the same discipline as the r12 PQ-codec equivalence test."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -103,6 +104,40 @@ def test_double_array_lit_is_single_literal_and_bit_exact(spark):
         df._jdf.queryExecution().analyzed().expressions().apply(0).child()
     )
     assert child.getClass().getSimpleName() == "Literal"
+
+
+@pytest.mark.parametrize("bad", [float("inf"), float("-inf"), float("nan")])
+def test_double_array_lit_rejects_non_finite(spark, bad):
+    """inf/nan have no D-suffix literal: the call itself raises, naming
+    the value, instead of handing back a Column that fails later with
+    UNRESOLVED_COLUMN."""
+    from flink_spark.exprutil import double_array_lit
+
+    with pytest.raises(ValueError, match=repr(bad)):
+        double_array_lit(spark, [[0.5, bad]])
+
+
+def test_double_array_lit_fallback_is_bit_exact(spark, monkeypatch):
+    """When the Literal lift fails (Spark internals moved), the fallback
+    parsed-string Column carries the same doubles bit for bit."""
+    import struct
+
+    from flink_spark import exprutil
+
+    class _NoFold:
+        def sql(self, _text):
+            raise RuntimeError("classic-mode internals unavailable")
+
+    monkeypatch.setattr(exprutil, "_LIT_MEMO", {})
+    vals = [0.1, 1.0 / 3.0, -2.2250738585072014e-308, 5e-324, -0.0,
+            1.7976931348623157e308, float(2 ** 53 + 1), -1.5e-8]
+    col = exprutil.double_array_lit(_NoFold(), [vals])
+    df = spark.range(1).select(col.alias("v"))
+    child = df._jdf.queryExecution().analyzed().expressions().apply(0).child()
+    assert child.getClass().getSimpleName() != "Literal"  # fallback taken
+    got = df.first()["v"][0]
+    assert [struct.pack("<d", x) for x in got] == \
+        [struct.pack("<d", v) for v in vals]
 
 
 def test_cc_sql_round_matches_dataframe_round(spark):

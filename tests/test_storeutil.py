@@ -530,3 +530,31 @@ def test_run_parallel_runs_all_and_propagates_errors(tmp_path):
             lambda: (_ for _ in ()).throw(RuntimeError("boom")),
         )
     assert "d" in hits
+
+
+def test_one_shot_drains_leave_schema_memo_size_unchanged(spark):
+    """Every one-shot drain memoizes the schemas of stores under its
+    mkdtemp root; removing the root must drop them, or the memo grows
+    by one drain's stores per call in a long-lived process."""
+    import flink_spark.queries  # noqa: F401  (registers every query)
+    from tests.conftest import SMOKE_SF_DIR
+    from flink_spark.queries.registry import QUERIES
+
+    drain = QUERIES["stream_dedup_first"].fn
+    before = len(storeutil._SCHEMA_MEMO)
+    counts = [drain(spark, SMOKE_SF_DIR).count() for _ in range(3)]
+    assert counts[0] > 0 and len(set(counts)) == 1
+    assert len(storeutil._SCHEMA_MEMO) == before
+
+
+def test_remove_root_forgets_only_its_own_stores(spark, tmp_path):
+    df = spark.createDataFrame([(1, "a")], "k long, v string")
+    for store in ("r/s", "r/t", "r2/s"):
+        storeutil.write_bid_partition(df, str(tmp_path / store), 0)
+        storeutil.read_store(spark, str(tmp_path / store))
+    storeutil.remove_root(str(tmp_path / "r"))
+    assert not (tmp_path / "r").exists()
+    assert str(tmp_path / "r/s") not in storeutil._SCHEMA_MEMO
+    assert str(tmp_path / "r/t") not in storeutil._SCHEMA_MEMO
+    assert str(tmp_path / "r2/s") in storeutil._SCHEMA_MEMO
+    storeutil.remove_root(str(tmp_path / "r2"))
