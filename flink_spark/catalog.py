@@ -20,8 +20,16 @@ from pyspark.sql import DataFrame, SparkSession
 
 from flink_spark.localrows import rows_df
 from flink_spark.session import prepare_session
-from flink_spark.sqltok import det_digest as _det_digest
-from flink_spark.sqltok import match_paren as _match_paren
+from flink_spark.sqltok import (
+    det_digest as _det_digest,
+    mask_literals,
+    mask_literals_only,
+    match_paren as _match_paren,
+    search_outside_literals,
+    split_outside_literals,
+    split_top_commas,
+    sub_outside_literals,
+)
 
 
 @dataclass
@@ -89,8 +97,6 @@ def _extract_create(stmt: str):
     """Span-based CREATE TABLE (body) [DISTRIBUTED BY ...] WITH (opts)
     extraction; returns a dict or None. Literal-safe: `'path' = 'a)b'`
     or `'comment' = ') WITH ('` in the options cannot skew the split."""
-    from flink_spark.sqltok import mask_literals
-
     masked = mask_literals(stmt)
     hm = _CREATE_HEAD_RE.match(masked)
     if not hm:
@@ -134,8 +140,6 @@ def _extract_create(stmt: str):
 def _extract_ctas(stmt: str):
     """Span-based CTAS extraction (CREATE [OR REPLACE] TABLE t WITH (opts)
     AS SELECT ...); returns a dict or None."""
-    from flink_spark.sqltok import mask_literals
-
     masked = mask_literals(stmt)
     hm = re.match(
         r"^\s*CREATE\s+(?P<replace>OR\s+REPLACE\s+)?TABLE\s+"
@@ -437,7 +441,7 @@ class TableEnvironment:
         self.create_temporary_function(name, fn)
         self.user_functions[name] = ident
 
-    def _function_statement(self, stmt: str):
+    def _function_statement(self, st: "_Statement"):
         """SQL-text function DDL (reference SqlCreateFunction.java /
         SqlAlterFunction.java / SqlDropFunction.java /
         SqlShowFunctions.java; FunctionITCase shapes):
@@ -447,6 +451,7 @@ class TableEnvironment:
         it for SQL use — the bridge from the SQL surface to the Python
         UDF registry. Returns NotImplemented when the statement is not
         function DDL."""
+        stmt = st.text
         m = self._FN_CREATE_RE.match(stmt)
         if m:
             lang = (m.group("lang") or "PYTHON").upper()
@@ -647,7 +652,7 @@ class TableEnvironment:
             )
         return "/".join(f"{k}={given[k]}" for k in keys)
 
-    def _alter_table_statement(self, stmt: str):
+    def _alter_table_statement(self, st: "_Statement"):
         """Engine-managed ALTER TABLE / SHOW PARTITIONS. Partitions are
         REAL directories in the table's Hive layout (create/remove the
         ``col=v`` dirs — what the reference's catalog partition entries
@@ -659,6 +664,7 @@ class TableEnvironment:
         import os as _os
         import shutil as _shutil
 
+        stmt = st.text
         sp = self._SHOW_PARTS_RE.match(stmt)
         if sp:
             name = sp.group("name")
@@ -835,8 +841,6 @@ class TableEnvironment:
             # break reads).
             from pyspark.sql import functions as F
 
-            from flink_spark.sqltok import split_top_commas
-
             spec = self.tables[m.group("name")]
             declared = dict(spec.columns)
             changes: dict[str, str] = {}
@@ -864,8 +868,6 @@ class TableEnvironment:
             return None
         m = self._ALTER_ADDCOL_RE.match(stmt)
         if m and m.group("name") in self.tables:
-            from flink_spark.sqltok import split_top_commas
-
             spec = self.tables[m.group("name")]
             for part in split_top_commas(m.group("cols")):
                 toks = part.split()
@@ -1048,8 +1050,6 @@ class TableEnvironment:
         """Schema contracts (name -> [[col, type], ...]) of the declared
         catalog tables the statement references by word-boundary match on
         the literal-masked text."""
-        from flink_spark.sqltok import mask_literals
-
         masked = mask_literals(sql)
         out = {}
         for name, spec in self.tables.items():
@@ -1068,13 +1068,18 @@ class TableEnvironment:
         import hashlib
         import json
 
-        im = re.match(
-            r"^\s*INSERT\s+(?:INTO|OVERWRITE)\s+[\w.]+\s+(SELECT\b.*)$",
-            sql, re.IGNORECASE | re.DOTALL,
-        )
-        # an INSERT into an engine-managed sink can't be analyzed by bare
-        # spark.sql — the plan contract is the SELECT's schema
-        df = self.spark.sql(im.group(1) if im else sql)
+        st = _Statement(sql)
+        # an INSERT's plan contract is its body's schema: spark.sql on the
+        # whole INSERT would EXECUTE it (and cannot see engine sinks)
+        if st.insert is not None:
+            df = self.spark.sql(st.text[st.insert["body"]:])
+        elif st.is_query:
+            df = self.spark.sql(st.text)
+        else:
+            raise ValueError(
+                "COMPILE PLAN compiles an INSERT or a query, got: "
+                f"{st.text[:60]!r}"
+            )
         optimized = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "extended"
         )
@@ -1159,7 +1164,7 @@ class TableEnvironment:
                     f"changed from {cols} to {now}"
                 )
         sql = plan["sql"]
-        if re.match(r"^\s*INSERT\b", sql, re.IGNORECASE):
+        if _Statement(sql).kind == "INSERT":
             # an INSERT plan replays through the dialect (engine-managed
             # sinks included); the schema contract was checked at compile
             return self.execute_sql(sql)
@@ -1211,8 +1216,6 @@ class TableEnvironment:
             name = f"__tvf_{fn.lower()}_{_det_digest(m.group('tbl'), ts, *iv)}"
             out.createOrReplaceTempView(name)
             return name
-
-        from flink_spark.sqltok import sub_outside_literals
 
         # match on the literal-masked view (a TVF call quoted inside a
         # string is DATA, not structure) while the replacement reads the
@@ -1288,7 +1291,6 @@ class TableEnvironment:
         is (e0 >= s1) AND (e1 >= s0). Pure text rewrite — Spark executes
         the expanded expression natively (codegen'd comparisons)."""
         from flink_spark.functions.vectorsearch import _split_args
-        from flink_spark.sqltok import sub_outside_literals
 
         def norm(pair_text: str):
             parts = [p.strip() for p in _split_args(pair_text) if p.strip()]
@@ -1341,8 +1343,6 @@ class TableEnvironment:
 
         Pure text rewrite on CAST bodies found by balanced-paren scan —
         DDL column definitions (no CAST) are never touched."""
-        from flink_spark.sqltok import mask_literals
-
         while True:
             masked = mask_literals(stmt)
             rewritten = None
@@ -1408,8 +1408,6 @@ class TableEnvironment:
         arguments (RAND_INTEGER(1, ABS(n))) expand instead of silently
         falling through to the 1-arg SQL function. 1-arg calls are left
         for the registered SQL function (functions/builtins_ext.py)."""
-        from flink_spark.sqltok import mask_literals, split_top_commas
-
         while True:
             masked = mask_literals(stmt)
             rewritten = None
@@ -1457,12 +1455,6 @@ class TableEnvironment:
         ORDER BY / LIMIT applies once, over everything."""
         from collections import Counter
 
-        from flink_spark.sqltok import (
-            mask_literals,
-            split_top_commas,
-            sub_outside_literals,
-        )
-
         masked = mask_literals(stmt)
         zero = lambda _m: "CAST(0 AS BIGINT)"  # noqa: E731
 
@@ -1470,19 +1462,10 @@ class TableEnvironment:
         # ALL rounds (and the select-list NULL fix, which anchors on a
         # SELECT prefix) apply to the query part only (ADVICE r7: the
         # old code duplicated the INSERT head into every round)
-        im = re.match(
-            r"^\s*INSERT\s+(?:INTO|OVERWRITE)\s+"
-            r"(?:`[^`]+`|\w+)(?:\.(?:`[^`]+`|\w+))*\s*"
-            r"(?:PARTITION\s*\([^()]*\)\s*)?"
-            r"(?:\([^()]*\)\s*)?",
-            masked, re.IGNORECASE,
-        )
-        if im and re.match(
-            r"^\s*(?:SELECT\b|WITH\b|\()", masked[im.end():],
-            re.IGNORECASE,
-        ):
-            return stmt[: im.end()] + self._rewrite_group_id(
-                stmt[im.end():]
+        head = _insert_head(stmt, masked)
+        if head is not None:
+            return stmt[: head["body"]] + self._rewrite_group_id(
+                stmt[head["body"]:]
             )
 
         # a WITH prologue scopes over the full (possibly set-op) body —
@@ -1788,8 +1771,6 @@ class TableEnvironment:
         conflict resolution for KV hints). Blocks are located on the
         literals-only mask so a hint-shaped string INSIDE a literal is
         data, not a hint; block contents are read from the original."""
-        from flink_spark.sqltok import mask_literals_only
-
         masked_only = mask_literals_only(stmt)
         out: list[str] = []
         last = 0
@@ -1909,8 +1890,6 @@ class TableEnvironment:
         window()/session_window() grouping; TUMBLE_START/_END/_ROWTIME
         accessors → struct fields (rowtime = end - 1ms, the TVF
         window_time convention)."""
-        from flink_spark.sqltok import sub_outside_literals
-
         def acc(m):
             fn = m.group("fn").upper()
             part = m.group("part").upper()
@@ -1960,8 +1939,6 @@ class TableEnvironment:
     )
 
     def _rewrite_session_tvf(self, m):
-        from flink_spark.sqltok import split_top_commas
-
         unit = m.group("u").lower()
         gap = f"{m.group('n')} {unit}" + ("" if unit.endswith("s") else "s")
         drop = {"window_start", "window_end"}
@@ -2126,12 +2103,13 @@ class TableEnvironment:
             return db
         return f"{self.current_catalog}__{db}"
 
-    def _catalog_statement(self, stmt: str):
+    def _catalog_statement(self, st: "_Statement"):
         """Catalog / database DDL (reference GenericInMemoryCatalog;
         parser SqlCreateCatalog / SqlDropCatalog / SqlUseCatalog /
         SqlShowCatalogs / SqlDescribeCatalog / SqlShowCurrentCatalog,
         SqlCreateDatabase / SqlUseDatabase / SqlShowDatabases). Returns
         NotImplemented when the statement is not in this family."""
+        stmt = st.text
         m = re.match(
             r"^\s*CREATE\s+CATALOG\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
             r"(?P<n>\w+)\s*(?:COMMENT\s+'(?P<cmt>[^']*)'\s*)?"
@@ -2532,8 +2510,6 @@ class TableEnvironment:
     def _row_level_update(self, name: str, sets: str, cond: str | None):
         from pyspark.sql import functions as F
 
-        from flink_spark.sqltok import split_top_commas
-
         spec = self._dml_target(name, "UPDATE")
         df = self._source_df(spec)
         assignments: dict[str, str] = {}
@@ -2702,9 +2678,7 @@ class TableEnvironment:
                 view = f"__ptf_{_det_digest(stmt[m.start():close_idx + 1])}"
                 out.createOrReplaceTempView(view)
                 stmt = stmt[: m.start()] + view + stmt[close_idx + 1 :]
-                from flink_spark.sqltok import mask_literals as _ml
-
-                masked = _ml(stmt)
+                masked = mask_literals(stmt)
         return stmt
 
     def _call_procedure(self, name: str, arg_body: str):
@@ -2741,22 +2715,124 @@ class TableEnvironment:
         return rows_df(self.spark, rows, schema)
 
     def execute_sql(self, sql: str):
-        stmt = sql.strip().rstrip(";")
-        from flink_spark.sqltok import (
-            mask_literals,
-            split_outside_literals,
-            sub_outside_literals,
-        )
+        """Run one SQL statement through the dialect layer.
 
-        # every keyword gate and structural rewrite below runs against the
-        # literal-masked view: a marker keyword inside a string literal can
-        # no longer route (or mangle) the statement
-        masked = mask_literals(stmt)
-        up = masked.upper()
+        The statement is classified once (``_Statement``: the kind is its
+        leading keyword, or ``QUERY`` for a query head; plus the INSERT
+        head and the query span), then dispatched through the kind table
+        ``_HANDLERS``: the kind's handlers in routing order, each with the
+        number of ``_REWRITES`` it sees. Before a handler runs, that
+        prefix of the ordered rewrite chain has been applied to the text
+        in place; a handler placed before the end of the chain sees only
+        the prefix (MODEL DDL stops before ML_PREDICT, MATERIALIZED TABLE
+        DDL before the legacy group windows, EXPLAIN before user PTFs). A
+        handler answers ``NotImplemented`` when the statement is not its
+        shape; when every handler of the kind has declined, the rest of
+        the rewrites run and the text goes to ``spark.sql``."""
+        return self._route(_Statement(sql))
+
+    def _route(self, st: "_Statement"):
+        done = 0
+        for upto, handler in _ROUTES.get(st.kind, ()):
+            done = self._rewrite(st, done, upto)
+            out = getattr(self, handler)(st)
+            if out is not NotImplemented:
+                return out
+        self._rewrite(st, done, len(_REWRITES))
+        return self.spark.sql(st.text)
+
+    def _rewrite(self, st: "_Statement", start: int, stop: int) -> int:
+        """Apply ``_REWRITES[start:stop]`` to the statement in place,
+        re-masking once per rewrite that changed the text."""
+        for _name, gate, rewrite in _REWRITES[start:stop]:
+            if gate(self, st):
+                text = rewrite(self, st)
+                if text != st.text:
+                    st.set_text(text)
+        return max(start, stop)
+
+    def _probe_rewrite(self, st: "_Statement", rewrite) -> str:
+        """Apply a subquery-predicate rewrite to the statement's query
+        span (the whole text of a query, the body of an INSERT), keeping
+        it only when ``spark.sql`` can analyze the result. The probe is
+        side-effect free because the span is a query, which ``spark.sql``
+        plans lazily; a DML text would execute. A failed probe keeps the
+        original text, except for a quantified comparison in a query:
+        Spark cannot parse ANY/SOME/ALL at all, so that raises a clean
+        unsupported-shape error instead of Spark's opaque parse error."""
+        start = st.query_start
+        body = st.text[start:]
+        cand = rewrite(body)
+        if cand == body:
+            return st.text
+        try:
+            self.spark.sql(cand)  # analysis probe, no execution
+        except Exception as exc:
+            if start or rewrite is not _rewrite_quantified_cmp:
+                # e.g. a correlated subquery, which the derived-table
+                # wrapping nests one correlation level too deep — keep
+                # the original (upstream semantics) over failing
+                return st.text
+            raise ValueError(
+                "quantified comparison (ANY/SOME/ALL "
+                "<subquery>) could not be planned for this "
+                "shape. Supported: identifier probes against "
+                "a subquery, including correlated subqueries "
+                "(aggregates, DISTINCT, ORDER/LIMIT, window "
+                "functions); NOT supported: outer references "
+                "more than one subquery level away from the "
+                "quantified predicate. Underlying analysis "
+                f"error: {exc}"
+            ) from exc
+        return st.text[:start] + cand
+
+    def _rewrite_options_hints(self, stmt: str) -> str:
+        """Dynamic table options (reference FlinkHints OPTIONS hint /
+        SqlTableRef: `FROM t /*+ OPTIONS('k'='v') */` overrides the
+        declared WITH options for THIS query only). The hint lives in a
+        comment, so it is read from the ORIGINAL text (the masked view
+        blanks comments by design) and replaced by a temp view over the
+        re-opened source."""
+
+        def _apply_hint(hm: re.Match) -> str:
+            tbl = hm.group("tbl")
+            if tbl not in self.tables:
+                return hm.group(0)  # not ours — leave for Spark
+            src0 = self.tables[tbl]
+            opts = dict(src0.options)
+            opts.update({
+                m2.group("k"): m2.group("v")
+                for m2 in _OPT_RE.finditer(hm.group("opts"))
+            })
+            for guard in ("connector", "path"):
+                if opts.get(guard) != src0.options.get(guard):
+                    raise ValueError(
+                        f"OPTIONS hint cannot change {guard!r}"
+                    )
+            tmp = TableSpec(
+                name=tbl, columns=list(src0.columns), options=opts,
+                watermark=src0.watermark,
+                watermark_kind=src0.watermark_kind,
+                primary_key=list(src0.primary_key),
+            )
+            view = f"__opts_{tbl}_{_det_digest(*sorted(opts.items()))}"
+            df = self._source_df(tmp)
+            if df is None:
+                raise ValueError(
+                    f"OPTIONS hint: table {tbl!r} is not readable"
+                )
+            df.createOrReplaceTempView(view)
+            return view
+
+        return _OPTIONS_HINT_RE.sub(_apply_hint, stmt)
+
+    # -- statement handlers (see _HANDLERS) --------------------------------
+
+    def _sql_jar(self, st: "_Statement"):
         jm = re.match(
             r"^\s*(?:(?P<add>ADD)|(?P<rem>REMOVE))\s+JAR\s+'(?P<path>[^']+)'\s*$"
             r"|^\s*SHOW\s+JARS\s*$",
-            stmt, re.IGNORECASE,
+            st.text, re.IGNORECASE,
         )
         if jm:
             # JAR statements (reference jar.md / SqlAddJar, SqlShowJars,
@@ -2789,13 +2865,19 @@ class TableEnvironment:
                 self.spark, [(j,) for j in getattr(self, "_jars", [])],
                 "jars string"
             )
+        return NotImplemented
+
+    def _sql_call(self, st: "_Statement"):
         cm = re.match(
             r"^\s*CALL\s+(?P<name>[\w.]+)\s*\((?P<args>.*)\)\s*$",
-            stmt, re.IGNORECASE | re.DOTALL,
+            st.text, re.IGNORECASE | re.DOTALL,
         )
         if cm:
             return self._call_procedure(cm.group("name"), cm.group("args"))
-        if re.match(r"^\s*SHOW\s+PROCEDURES\s*$", stmt, re.IGNORECASE):
+        return NotImplemented
+
+    def _sql_show_procedures(self, st: "_Statement"):
+        if re.match(r"^\s*SHOW\s+PROCEDURES\s*$", st.text, re.IGNORECASE):
             # SHOW PROCEDURES (reference show.md / SqlShowProcedures)
             names = sorted(
                 set(self._builtin_procedures())
@@ -2804,7 +2886,10 @@ class TableEnvironment:
             return rows_df(
                 self.spark, [(n,) for n in names], "procedure_name string"
             )
-        if re.match(r"^\s*SHOW\s+TABLES\s*$", stmt, re.IGNORECASE):
+        return NotImplemented
+
+    def _sql_show_tables(self, st: "_Statement"):
+        if re.match(r"^\s*SHOW\s+TABLES\s*$", st.text, re.IGNORECASE):
             # SHOW TABLES must list every CATALOG table (reference
             # SqlShowTables) — including engine filesystem tables that
             # are still sink-only (no data written yet, so no temp view
@@ -2819,11 +2904,14 @@ class TableEnvironment:
                     rows_df(self.spark, missing, base.schema)
                 )
             return base
+        return NotImplemented
+
+    def _sql_show_like(self, st: "_Statement"):
         shm = re.match(
             r"^\s*(?P<base>SHOW\s+[A-Z]+(?:\s+(?!NOT\b|LIKE\b|ILIKE\b)"
             r"[A-Z]+)?(?:\s+(?:FROM|IN)\s+[\w.]+)?)\s+"
             r"(?P<neg>NOT\s+)?(?P<op>LIKE|ILIKE)\s+'(?P<pat>[^']*)'\s*$",
-            stmt, re.IGNORECASE,
+            st.text, re.IGNORECASE,
         )
         if shm:
             # SHOW <objects> [[NOT] (LIKE | ILIKE) '<sql_like_pattern>']
@@ -2856,11 +2944,14 @@ class TableEnvironment:
             if shm.group("neg"):
                 pred = ~pred
             return base.filter(pred)
+        return NotImplemented
+
+    def _sql_compile_plan(self, st: "_Statement"):
         pm = re.match(
             r"^\s*COMPILE(?P<andexec>\s+AND\s+EXECUTE)?\s+PLAN\s+"
             r"'(?P<path>[^']+)'\s+(?:(?P<ine>IF\s+NOT\s+EXISTS)\s+)?"
             r"FOR\s+(?P<body>.+)$",
-            stmt, re.IGNORECASE | re.DOTALL,
+            st.text, re.IGNORECASE | re.DOTALL,
         )
         if pm:
             # COMPILE [AND EXECUTE] PLAN (reference SqlCompilePlan /
@@ -2875,388 +2966,137 @@ class TableEnvironment:
             if pm.group("andexec"):
                 return self.execute_plan(path)
             return None
+        return NotImplemented
+
+    def _sql_execute_plan(self, st: "_Statement"):
         em2 = re.match(
             r"^\s*EXECUTE\s+PLAN\s+'(?P<path>[^']+)'\s*$",
-            stmt, re.IGNORECASE,
+            st.text, re.IGNORECASE,
         )
         if em2:
             return self.execute_plan(em2.group("path"))
+        return NotImplemented
+
+    def _sql_delete(self, st: "_Statement"):
         dm_del = re.match(
             r"^\s*DELETE\s+FROM\s+(?P<name>[\w.]+)"
             r"(?:\s+WHERE\s+(?P<cond>.+))?$",
-            stmt, re.IGNORECASE | re.DOTALL,
+            st.text, re.IGNORECASE | re.DOTALL,
         )
         if dm_del and dm_del.group("name") in self.tables:
             return self._row_level_delete(
                 dm_del.group("name"), dm_del.group("cond")
             )
+        return NotImplemented
+
+    def _sql_update(self, st: "_Statement"):
         dm_upd = re.match(
             r"^\s*UPDATE\s+(?P<name>[\w.]+)\s+SET\s+(?P<sets>.+?)"
             r"(?:\s+WHERE\s+(?P<cond>.+))?$",
-            stmt, re.IGNORECASE | re.DOTALL,
+            st.text, re.IGNORECASE | re.DOTALL,
         )
         if dm_upd and dm_upd.group("name") in self.tables:
             return self._row_level_update(
                 dm_upd.group("name"), dm_upd.group("sets"),
                 dm_upd.group("cond"),
             )
-        _nis_head = masked.lstrip("( \t\n\r")
-        if re.match(r"(?:SELECT|VALUES|TABLE)\b", _nis_head,
-                    re.IGNORECASE):
-            _nis_is_query = True
-        elif re.match(r"WITH\b", _nis_head, re.IGNORECASE):
-            _nis_is_query = (
-                (_with_body_verb(_nis_head) or "").upper()
-                not in ("", "INSERT", "DELETE", "UPDATE", "MERGE")
+        return NotImplemented
+
+    def _sql_explain(self, st: "_Statement"):
+        """EXPLAIN <details> <query> (reference SqlRichExplain grammar
+        `EXPLAIN [ExplainDetail[, ExplainDetail]*] <stmt>`). One detail
+        answers in that detail's own column: ESTIMATED_COST as Catalyst's
+        per-node statistics, CHANGELOG_MODE as the inferred per-node
+        changelog modes (reference FlinkChangelogModeInferenceProgram; PK'd
+        engine tables are upsert sources), JSON_EXECUTION_PLAN as the
+        Flink-shaped JSON node graph, PLAN_ADVICE as structured advice rows
+        (empty = the plan already has the shape we'd want at scale). Several
+        details give one combined text result with a section per detail,
+        like the reference's single explain string."""
+        em = _EXPLAIN_RE.match(st.text)
+        if not em:
+            return NotImplemented
+        from flink_spark.changelog_mode import (
+            explain as _cm_explain,
+            ir_from_analyzed,
+        )
+        from flink_spark.plan_advice import (
+            advice_df,
+            json_execution_plan,
+            plan_advice,
+        )
+
+        details = [d.strip().upper() for d in em.group("details").split(",")]
+        df = self.spark.sql(em.group("q"))
+        qe = df._jdf.queryExecution()
+
+        def changelog() -> str:
+            pk_tables = {
+                n: list(s.primary_key)
+                for n, s in self.tables.items()
+                if s.primary_key
+            }
+            return _cm_explain(
+                ir_from_analyzed(qe.analyzed().toString(), pk_tables)
+            )
+
+        if details == ["PLAN_ADVICE"]:
+            return advice_df(df)
+        if len(details) == 1:
+            column, text = {
+                "ESTIMATED_COST": ("plan_with_stats", qe.stringWithStats),
+                "CHANGELOG_MODE": ("changelog_plan", changelog),
+                "JSON_EXECUTION_PLAN": (
+                    "json_execution_plan", lambda: json_execution_plan(df)
+                ),
+            }[details[0]]
+            return rows_df(self.spark, [(text(),)], f"{column} string")
+        sections = []
+        if "ESTIMATED_COST" in details:
+            sections.append(
+                "== Optimized Physical Plan With Estimated Cost ==\n"
+                + qe.stringWithStats()
             )
         else:
-            _nis_is_query = False
-        if (
-            not _nis_is_query
-            and re.match(r"INSERT\b", _nis_head, re.IGNORECASE)
-            and (re.search(r"\bIN\s*\(", up) or _QCMP_RE.search(masked))
-        ):
-            # INSERT bodies are pure queries: apply the same dialect
-            # rewrites by probing the BODY alone (spark.sql is lazy for
-            # queries), so `INSERT INTO t SELECT ... WHERE x > ALL
-            # (<subquery>)` works like the reference instead of dying on
-            # Spark's parser, and a deviant-position [NOT] IN in the
-            # body gets standard three-valued semantics. The whole-
-            # statement probe stays forbidden (it would EXECUTE the
-            # INSERT); a WITH-headed body whose verb is DML is skipped
-            # for the same reason.
-            bm = re.match(
-                r"^(\s*INSERT\s+(?:INTO|OVERWRITE)\s+(?:TABLE\s+)?"
-                r"[\w.`]+\s*(?:\([^)]*\)\s*)?"
-                r"(?:PARTITION\s*\([^)]*\)\s*)?)"
-                r"((?:SELECT|WITH|VALUES|TABLE)\b.*)$",
-                masked, re.IGNORECASE | re.DOTALL,
+            sections.append(
+                "== Physical Plan ==\n" + qe.executedPlan().toString()
             )
-            if bm is not None:
-                cut = bm.end(1)
-                body = stmt[cut:]
-                body_ok = True
-                if re.match(r"\s*WITH\b", bm.group(2), re.IGNORECASE):
-                    verb = _with_body_verb(bm.group(2).lstrip())
-                    body_ok = (verb or "").upper() not in (
-                        "", "INSERT", "DELETE", "UPDATE", "MERGE"
-                    )
-                if body_ok:
-                    # quantified FIRST: its syntax is unparseable
-                    # upstream, so a NOT IN probe on text still
-                    # containing ANY/ALL would always fail and silently
-                    # drop the [NOT] IN fix
-                    for rwfn in (_rewrite_quantified_cmp,
-                                 _rewrite_nonconjunctive_not_in):
-                        cand = rwfn(body)
-                        if cand != body:
-                            try:
-                                self.spark.sql(cand)  # lazy: query body
-                                body = cand
-                            except Exception:
-                                pass
-                    if stmt[cut:] != body:
-                        stmt = stmt[:cut] + body
-                        masked = mask_literals(stmt)
-                        up = masked.upper()
-        if _nis_is_query and _QCMP_RE.search(masked):
-            # quantified subquery comparisons (ANY/SOME/ALL) — standard
-            # SQL the reference plans natively and Spark cannot parse;
-            # rewritten to EXISTS composites. Same pure-query-head +
-            # analysis-probe discipline as the NOT IN rewrite (a failed
-            # probe falls back to the original text, surfacing Spark's
-            # own parse error for shapes the rewrite cannot cover).
-            # MUST run before the [NOT] IN rewrite: quantified syntax is
-            # unparseable upstream, so a NOT IN probe on text still
-            # containing ANY/ALL would always fail and silently drop
-            # that fix (caught by the boolean-tree fuzz surface, r11).
-            # Correlated Q works through the same composite (r12,
-            # measured — see _rewrite_quantified_cmp). When a rewrite
-            # was attempted and does not analyze, the statement has no
-            # upstream meaning (Spark cannot parse ANY/SOME/ALL
-            # subquery comparisons at all), so raise a clean
-            # unsupported-shape error instead of falling through to
-            # Spark's opaque parse error.
-            cand = _rewrite_quantified_cmp(stmt)
-            if cand != stmt:
-                try:
-                    self.spark.sql(cand)  # analysis probe, no execution
-                except Exception as exc:
-                    raise ValueError(
-                        "quantified comparison (ANY/SOME/ALL "
-                        "<subquery>) could not be planned for this "
-                        "shape. Supported: identifier probes against "
-                        "a subquery, including correlated subqueries "
-                        "(aggregates, DISTINCT, ORDER/LIMIT, window "
-                        "functions); NOT supported: outer references "
-                        "more than one subquery level away from the "
-                        "quantified predicate. Underlying analysis "
-                        f"error: {exc}"
-                    ) from exc
-                stmt = cand
-                masked = mask_literals(stmt)
-                up = masked.upper()
-        if _nis_is_query and re.search(r"\bIN\s*\(", up):
-            # deviant-position [NOT] IN <subquery> (value position for
-            # both operators; effectively-negated NNF-disjunctive
-            # predicates): restore standard three-valued logic upstream
-            # Spark loses there (see _rewrite_nonconjunctive_not_in;
-            # conjunctive spellings pass through byte-identical).
-            # PURE-QUERY heads only, so the analysis probe below stays
-            # side-effect-free — spark.sql on a query is lazy, on a
-            # command it would execute. A WITH head counts only when its
-            # prologue parses AND the body verb is not DML: Spark's
-            # grammar allows ctes before dmlStatementNoWith, and probing
-            # a WITH-prefixed INSERT would EXECUTE it (then the normal
-            # path would run it a second time).
-            cand = _rewrite_nonconjunctive_not_in(stmt)
-            if cand != stmt:
-                try:
-                    self.spark.sql(cand)  # analysis probe, no execution
-                    stmt = cand
-                    masked = mask_literals(stmt)
-                    up = masked.upper()
-                except Exception:
-                    # e.g. a correlated subquery, which the derived-table
-                    # wrapping nests one correlation level too deep —
-                    # keep the original (upstream semantics) over failing
-                    pass
-        if re.search(r"\bOVERLAPS\b", up):
-            # (tp1, t1) OVERLAPS (tp2, t2) (reference sql_functions.yml
-            # temporal family; TemporalOverlapsConverter.java — Calcite's
-            # standard convertlet): endpoints normalized so s<=e, interval
-            # second members added to the time point, then
-            # (e0 >= s1) AND (e1 >= s0), both bounds INCLUSIVE.
-            stmt = self._rewrite_overlaps(stmt)
-            masked = mask_literals(stmt)
-            up = masked.upper()
-        if "GROUP_ID" in up:
-            # GROUP_ID() (reference DecomposeGroupingSetsRule.java:369):
-            # 0 for distinct grouping sets; duplicate sets decompose into
-            # UNION ALL rounds (see _rewrite_group_id)
-            stmt = self._rewrite_group_id(stmt)
-            masked = mask_literals(stmt)
-            up = masked.upper()
-        if re.search(
-            r"\bAS\s+(?:CHAR|VARCHAR|TIMESTAMP(?:_LTZ)?)\s*\(\s*\d+\s*\)",
-            up,
-        ):
-            # parameterized CHAR/VARCHAR/TIMESTAMP targets inside CAST
-            # (reference CharVarCharTrimPadCastRule /
-            # TimestampToTimestampCastRule): pad/trim + precision-truncate
-            # semantics Spark's bare cast lacks
-            stmt = self._rewrite_precision_casts(stmt)
-            masked = mask_literals(stmt)
-            up = masked.upper()
-        if "RAND_INTEGER" in up:
-            # RAND_INTEGER(seed, bound) (reference sql_functions.yml):
-            # the seeded form cannot be a SQL function (Spark needs a
-            # foldable seed), so expand it textually onto RAND(seed);
-            # the 1-arg form resolves to the registered SQL function
-            # (functions/builtins_ext.py). Balanced-paren arg split so
-            # nested calls in either argument survive (ADVICE r7: the old
-            # paren-free regex silently fell through on
-            # RAND_INTEGER(1, ABS(n)) into a wrong-arity error).
-            stmt = self._rewrite_rand_integer(stmt)
-            masked = mask_literals(stmt)
-            up = masked.upper()
-        if "/*+" in stmt:
-            # Join hints (reference hints.md "Join Hints"): BROADCAST /
-            # SHUFFLE_HASH / SHUFFLE_MERGE are Spark-native spellings and
-            # pass straight through to Catalyst; NEST_LOOP maps onto
-            # Spark's SHUFFLE_REPLICATE_NL. LOOKUP hints get their option
-            # schema validated (reference LookupJoinHintOptions) — the
-            # strategies themselves live in operators/joins.py.
-            stmt = self._rewrite_join_hints(stmt)
-            masked = mask_literals(stmt)
-            up = masked.upper()
-        if (
-            ("FROM_CHANGELOG" in up or "TO_CHANGELOG" in up)
-            and not up.lstrip().startswith("EXPLAIN")
-        ):
-            # FROM_CHANGELOG / TO_CHANGELOG PTFs (reference changelog.md):
-            # rewrite each call into a computed temp view
-            from flink_spark.streaming.changelog_ptf import (
-                rewrite_changelog_ptfs,
+        if "CHANGELOG_MODE" in details:
+            sections.append("== Changelog Mode ==\n" + changelog())
+        if "PLAN_ADVICE" in details:
+            adv = plan_advice(df)
+            body = "\n".join(
+                f"advice[{i + 1}]: [{a.severity.upper()}] {a.rule}: "
+                f"{a.hint}" for i, a in enumerate(adv)
+            ) or "No available advice."
+            sections.append("== Optimization Advice ==\n" + body)
+        if "JSON_EXECUTION_PLAN" in details:
+            sections.append(
+                "== Physical Execution Plan ==\n" + json_execution_plan(df)
             )
-
-            stmt = rewrite_changelog_ptfs(self.spark, stmt)
-            masked = mask_literals(stmt)
-            up = masked.upper()
-        if "VECTOR_SEARCH" in up and not up.lstrip().startswith("EXPLAIN"):
-            # VECTOR_SEARCH TVF (reference
-            # StreamExecVectorSearchTableFunction.java): replace each call
-            # with a computed temp view, then route the rewritten text
-            from flink_spark.functions.vectorsearch import (
-                rewrite_vector_search,
-            )
-
-            stmt = rewrite_vector_search(self.spark, stmt)
-            masked = mask_literals(stmt)
-            up = masked.upper()
-        em = re.match(
-            r"^\s*EXPLAIN\s+\(?\s*(?P<details>(?:ESTIMATED_COST|"
-            r"CHANGELOG_MODE|PLAN_ADVICE|JSON_EXECUTION_PLAN)"
-            r"(?:\s*,\s*(?:ESTIMATED_COST|CHANGELOG_MODE|PLAN_ADVICE|"
-            r"JSON_EXECUTION_PLAN))+)\s*\)?\s+(?P<q>.+)$",
-            stmt, re.IGNORECASE | re.DOTALL,
+        return rows_df(
+            self.spark, [("\n\n".join(sections),)], "result string"
         )
-        if em:
-            # EXPLAIN with MULTIPLE details (reference SqlRichExplain
-            # grammar `EXPLAIN [ExplainDetail[, ExplainDetail]*] <stmt>`):
-            # one combined text result with a section per detail, like the
-            # reference's single explain string
-            details = [
-                d.strip().upper() for d in em.group("details").split(",")
-            ]
-            df = self.spark.sql(em.group("q"))
-            sections = []
-            if "ESTIMATED_COST" in details:
-                sections.append(
-                    "== Optimized Physical Plan With Estimated Cost ==\n"
-                    + df._jdf.queryExecution().stringWithStats()
-                )
-            else:
-                sections.append(
-                    "== Physical Plan ==\n"
-                    + df._jdf.queryExecution().executedPlan().toString()
-                )
-            if "CHANGELOG_MODE" in details:
-                from flink_spark.changelog_mode import (
-                    explain as _cm_explain,
-                    ir_from_analyzed,
-                )
 
-                pk_tables = {
-                    n: list(s.primary_key)
-                    for n, s in self.tables.items()
-                    if s.primary_key
-                }
-                sections.append(
-                    "== Changelog Mode ==\n" + _cm_explain(ir_from_analyzed(
-                        df._jdf.queryExecution().analyzed().toString(),
-                        pk_tables,
-                    ))
-                )
-            if "PLAN_ADVICE" in details:
-                from flink_spark.plan_advice import plan_advice
+    def _sql_statement_set(self, st: "_Statement"):
+        # SQL statement set (reference SqlExecute + SqlStatementSet:
+        # EXECUTE STATEMENT SET BEGIN <insert>; ...; END) — routed to
+        # the Table API StatementSet (shared-scan caching included)
+        ss = re.match(
+            r"^\s*EXECUTE\s+STATEMENT\s+SET\s+BEGIN\s+(?P<body>.*?)\s*"
+            r"END\s*$",
+            st.text, re.IGNORECASE | re.DOTALL,
+        )
+        if not ss:
+            return NotImplemented
+        sset = self.create_statement_set()
+        for ins in split_outside_literals(ss.group("body")):
+            if ins.strip():
+                sset.add_insert_sql(ins.strip())
+        return sset.execute()
 
-                adv = plan_advice(df)
-                body = "\n".join(
-                    f"advice[{i + 1}]: [{a.severity.upper()}] {a.rule}: "
-                    f"{a.hint}" for i, a in enumerate(adv)
-                ) or "No available advice."
-                sections.append("== Optimization Advice ==\n" + body)
-            if "JSON_EXECUTION_PLAN" in details:
-                from flink_spark.plan_advice import json_execution_plan
-
-                sections.append(
-                    "== Physical Execution Plan ==\n"
-                    + json_execution_plan(df)
-                )
-            return rows_df(
-                self.spark, [("\n\n".join(sections),)], "result string"
-            )
-        if "ESTIMATED_COST" in up:
-            # EXPLAIN ESTIMATED_COST (reference ExplainDetail
-            # ESTIMATED_COST): Catalyst's per-node statistics — real
-            # numbers from the optimizer, not annotations
-            em = re.match(
-                r"^\s*EXPLAIN\s+ESTIMATED_COST\s+(?P<q>.+)$",
-                stmt, re.IGNORECASE | re.DOTALL,
-            )
-            if em:
-                df = self.spark.sql(em.group("q"))
-                txt = df._jdf.queryExecution().stringWithStats()
-                return rows_df(
-                    self.spark, [(txt,)], "plan_with_stats string"
-                )
-        if "CHANGELOG_MODE" in up:
-            # EXPLAIN CHANGELOG_MODE <query> (reference ExplainDetail.java:36
-            # + FlinkChangelogModeInferenceProgram.scala): per-node inferred
-            # changelog modes. PK'd engine tables are upsert sources (and
-            # get ChangelogNormalize injected, like upsert-kafka scans).
-            em = re.match(
-                r"^\s*EXPLAIN\s+CHANGELOG_MODE\s+(?P<q>.+)$",
-                stmt, re.IGNORECASE | re.DOTALL,
-            )
-            if em:
-                from flink_spark.changelog_mode import (
-                    explain as _cm_explain,
-                    ir_from_analyzed,
-                )
-
-                df = self.spark.sql(em.group("q"))
-                plan_text = df._jdf.queryExecution().analyzed().toString()
-                pk_tables = {
-                    n: list(s.primary_key)
-                    for n, s in self.tables.items()
-                    if s.primary_key
-                }
-                txt = _cm_explain(ir_from_analyzed(plan_text, pk_tables))
-                return rows_df(
-                    self.spark, [(txt,)], "changelog_plan string"
-                )
-        if "JSON_EXECUTION_PLAN" in up:
-            # EXPLAIN JSON_EXECUTION_PLAN <query> (reference
-            # ExplainDetail.java:39): the Flink-shaped JSON node graph
-            # (id/type/pact/contents/parallelism/predecessors with
-            # ship_strategy) serialized from Spark's physical plan.
-            em = re.match(
-                r"^\s*EXPLAIN\s+JSON_EXECUTION_PLAN\s+(?P<q>.+)$",
-                stmt, re.IGNORECASE | re.DOTALL,
-            )
-            if em:
-                from flink_spark.plan_advice import json_execution_plan
-
-                df = self.spark.sql(em.group("q"))
-                return rows_df(
-                    self.spark, [(json_execution_plan(df),)],
-                    "json_execution_plan string"
-                )
-        if "PLAN_ADVICE" in up:
-            # EXPLAIN PLAN_ADVICE <query> (reference ExplainDetail
-            # PLAN_ADVICE): structured advice rows; empty result = the
-            # plan already has the shape we'd want at scale
-            em = re.match(
-                r"^\s*EXPLAIN\s+PLAN_ADVICE\s+(?P<q>.+)$",
-                stmt, re.IGNORECASE | re.DOTALL,
-            )
-            if em:
-                from flink_spark.plan_advice import advice_df
-
-                return advice_df(self.spark.sql(em.group("q")))
-        if "STATEMENT" in up:
-            # SQL statement set (reference SqlExecute + SqlStatementSet:
-            # EXECUTE STATEMENT SET BEGIN <insert>; ...; END) — routed to
-            # the Table API StatementSet (shared-scan caching included)
-            ss = re.match(
-                r"^\s*EXECUTE\s+STATEMENT\s+SET\s+BEGIN\s+(?P<body>.*?)\s*"
-                r"END\s*$",
-                stmt, re.IGNORECASE | re.DOTALL,
-            )
-            if ss:
-                sset = self.create_statement_set()
-                for ins in split_outside_literals(ss.group("body")):
-                    if ins.strip():
-                        sset.add_insert_sql(ins.strip())
-                return sset.execute()
-        if "FUNCTION" in up:
-            r = self._function_statement(stmt)
-            if r is not NotImplemented:
-                return r
-        if getattr(self, "user_ptfs", None):
-            rewritten = self._rewrite_user_ptfs(stmt, masked)
-            if rewritten != stmt:
-                stmt = rewritten
-                masked = mask_literals(stmt)
-                up = masked.upper()
-        if re.match(
-            r"^\s*(ALTER\s+TABLE|SHOW\s+PARTITIONS)\b", stmt, re.IGNORECASE
-        ):
-            r = self._alter_table_statement(stmt)
-            if r is not NotImplemented:
-                return r
+    def _sql_drop_table(self, st: "_Statement"):
+        stmt = st.text
         dt = re.match(
             r"^\s*DROP\s+(?:TEMPORARY\s+)?TABLE\s+"
             r"(?P<ife>IF\s+EXISTS\s+)?(?P<name>[\w.]+)\s*$",
@@ -3282,382 +3122,329 @@ class TableEnvironment:
                     return self.spark.sql(stmt)
                 except Exception:  # noqa: BLE001 — IF EXISTS: absent is fine
                     return None
-            # not ours — let Spark resolve (and error) on its own catalog
-        if "CATALOG" in up or re.match(
-            r"^\s*(USE|SHOW\s+(CURRENT\s+)?DATABASES?|CREATE\s+DATABASE|"
-            r"DROP\s+DATABASE|ALTER\s+DATABASE)\b", stmt, re.IGNORECASE,
+        # not ours — let Spark resolve (and error) on its own catalog
+        return NotImplemented
+
+    def _sql_module(self, st: "_Statement"):
+        stmt = st.text
+        m = re.match(r"^\s*LOAD\s+MODULE\s+(?P<n>\w+)", stmt, re.IGNORECASE)
+        if m:
+            if any(n == m.group("n") for n, _ in self.modules):
+                raise ValueError(f"module {m.group('n')!r} already loaded")
+            self.modules.append((m.group("n"), True))
+            return None
+        m = re.match(r"^\s*UNLOAD\s+MODULE\s+(?P<n>\w+)", stmt, re.IGNORECASE)
+        if m:
+            if not any(n == m.group("n") for n, _ in self.modules):
+                raise ValueError(f"module {m.group('n')!r} is not loaded")
+            self.modules = [
+                (n, u) for n, u in self.modules if n != m.group("n")
+            ]
+            return None
+        m = re.match(r"^\s*USE\s+MODULES\s+(?P<ns>.+)$", stmt, re.IGNORECASE)
+        if m:
+            use = [n.strip() for n in m.group("ns").split(",")]
+            loaded = {n for n, _ in self.modules}
+            missing = [n for n in use if n not in loaded]
+            if missing:
+                raise ValueError(f"modules not loaded: {missing}")
+            # used modules in the given order, then disabled ones
+            self.modules = [(n, True) for n in use] + [
+                (n, False) for n, _ in self.modules if n not in use
+            ]
+            return None
+        m = re.match(
+            r"^\s*SHOW\s+(?P<full>FULL\s+)?MODULES\s*$", stmt, re.IGNORECASE
+        )
+        if m:
+            if m.group("full"):
+                return rows_df(
+                    self.spark, self.modules,
+                    "module_name string, used boolean"
+                )
+            return rows_df(
+                self.spark, [(n,) for n, u in self.modules if u],
+                "module_name string"
+            )
+        return NotImplemented
+
+    def _sql_connection(self, st: "_Statement"):
+        return self.connection_manager.handle(st.text)
+
+    def _sql_model(self, st: "_Statement"):
+        stmt = st.text
+        from flink_spark.models import (
+            MODEL_ALTER_RE,
+            MODEL_ALTER_RENAME_RE,
+            MODEL_ALTER_RESET_RE,
+            MODEL_CREATE_AS_RE,
+            MODEL_CREATE_RE,
+            MODEL_DROP_RE,
+            SHOW_MODELS_RE,
+        )
+
+        mas = MODEL_CREATE_AS_RE.match(stmt)
+        if mas:
+            return self.model_manager.create_as(mas, env=self)
+        for rx, h in (
+            (MODEL_CREATE_RE, "create"),
+            (MODEL_ALTER_RENAME_RE, "alter_rename"),
+            (MODEL_ALTER_RESET_RE, "alter_reset"),
+            (MODEL_ALTER_RE, "alter"),
+            (MODEL_DROP_RE, "drop"),
         ):
-            r = self._catalog_statement(stmt)
-            if r is not NotImplemented:
-                return r
-        if "MODULE" in up:
-            m = re.match(r"^\s*LOAD\s+MODULE\s+(?P<n>\w+)", stmt, re.IGNORECASE)
-            if m:
-                if any(n == m.group("n") for n, _ in self.modules):
-                    raise ValueError(f"module {m.group('n')!r} already loaded")
-                self.modules.append((m.group("n"), True))
-                return None
-            m = re.match(r"^\s*UNLOAD\s+MODULE\s+(?P<n>\w+)", stmt, re.IGNORECASE)
-            if m:
-                if not any(n == m.group("n") for n, _ in self.modules):
-                    raise ValueError(f"module {m.group('n')!r} is not loaded")
-                self.modules = [
-                    (n, u) for n, u in self.modules if n != m.group("n")
-                ]
-                return None
-            m = re.match(r"^\s*USE\s+MODULES\s+(?P<ns>.+)$", stmt, re.IGNORECASE)
-            if m:
-                use = [n.strip() for n in m.group("ns").split(",")]
-                loaded = {n for n, _ in self.modules}
-                missing = [n for n in use if n not in loaded]
-                if missing:
-                    raise ValueError(f"modules not loaded: {missing}")
-                # used modules in the given order, then disabled ones
-                self.modules = [(n, True) for n in use] + [
-                    (n, False) for n, _ in self.modules if n not in use
-                ]
-                return None
-            m = re.match(
-                r"^\s*SHOW\s+(?P<full>FULL\s+)?MODULES\s*$", stmt, re.IGNORECASE
-            )
-            if m:
-                if m.group("full"):
-                    return rows_df(
-                        self.spark, self.modules,
-                        "module_name string, used boolean"
-                    )
-                return rows_df(
-                    self.spark, [(n,) for n, u in self.modules if u],
-                    "module_name string"
-                )
-        if "CONNECTION" in up:
-            r = self.connection_manager.handle(stmt)
-            if r is not NotImplemented:
-                return r
-        if "MODEL" in up:
-            from flink_spark.models import (
-                MODEL_ALTER_RE,
-                MODEL_ALTER_RENAME_RE,
-                MODEL_ALTER_RESET_RE,
-                MODEL_CREATE_AS_RE,
-                MODEL_CREATE_RE,
-                MODEL_DROP_RE,
-                SHOW_MODELS_RE,
+            mm = rx.match(stmt)
+            if mm:
+                return getattr(self.model_manager, h)(mm)
+        if SHOW_MODELS_RE.match(stmt):
+            return self.model_manager.show()
+        scm = re.match(
+            r"^\s*SHOW\s+CREATE\s+MODEL\s+(?P<name>[\w.]+)\s*$",
+            stmt, re.IGNORECASE,
+        )
+        if scm:
+            # SHOW CREATE MODEL (reference SqlShowCreateModel.java →
+            # ShowCreateUtil.buildShowCreateModelRow): CREATE MODEL
+            # name, INPUT/OUTPUT schema lines, WITH options — secret
+            # option values masked like connections
+            from flink_spark.connections import (
+                MASKED_VALUE,
+                SENSITIVE_FIELD_NAMES,
             )
 
-            mas = MODEL_CREATE_AS_RE.match(stmt)
-            if mas:
-                return self.model_manager.create_as(mas, env=self)
-            for rx, h in (
-                (MODEL_CREATE_RE, "create"),
-                (MODEL_ALTER_RENAME_RE, "alter_rename"),
-                (MODEL_ALTER_RESET_RE, "alter_reset"),
-                (MODEL_ALTER_RE, "alter"),
-                (MODEL_DROP_RE, "drop"),
+            name = scm.group("name")
+            spec = self.model_manager.models.get(name)
+            if spec is None:
+                raise ValueError(
+                    f"Model with the identifier '{name}' doesn't exist."
+                )
+            lines = [f"CREATE MODEL {name}"]
+            if spec.input_schema:
+                lines.append(f"INPUT ({spec.input_schema})")
+            if spec.output_schema:
+                lines.append(f"OUTPUT ({spec.output_schema})")
+            if spec.options:
+                body = ",\n".join(
+                    f"  '{k}' = "
+                    f"'{MASKED_VALUE if k in SENSITIVE_FIELD_NAMES else v}'"
+                    for k, v in sorted(spec.options.items())
+                )
+                lines.append("WITH (\n" + body + "\n)")
+            return rows_df(
+                self.spark, [("\n".join(lines),)], "ddl string"
+            )
+        dmm = re.match(
+            r"^\s*(?:DESCRIBE|DESC)\s+MODEL\s+(?:(?P<ext>EXTENDED)\s+)?"
+            r"(?P<name>[\w.]+)\s*$",
+            stmt, re.IGNORECASE,
+        )
+        if dmm:
+            # DESCRIBE MODEL [EXTENDED] (reference
+            # DescribeModelOperation.java: input then output schema
+            # columns as (name, type, null, is input) rows)
+            name = dmm.group("name")
+            spec = self.model_manager.models.get(name)
+            if spec is None:
+                raise ValueError(
+                    f"Model with the identifier '{name}' doesn't exist."
+                )
+            rows = []
+            for schema, is_input in (
+                (spec.input_schema, True),
+                (spec.output_schema, False),
             ):
-                mm = rx.match(stmt)
-                if mm:
-                    return getattr(self.model_manager, h)(mm)
-            if SHOW_MODELS_RE.match(stmt):
-                return self.model_manager.show()
-            scm = re.match(
-                r"^\s*SHOW\s+CREATE\s+MODEL\s+(?P<name>[\w.]+)\s*$",
-                stmt, re.IGNORECASE,
+                for colspec in split_top_commas(schema or ""):
+                    toks = colspec.split(None, 1)
+                    if len(toks) == 2:
+                        rows.append(
+                            (toks[0], toks[1].upper(), True, is_input)
+                        )
+            out = rows_df(
+                self.spark, rows,
+                "name string, type string, `null` boolean, "
+                "`is input` boolean",
             )
-            if scm:
-                # SHOW CREATE MODEL (reference SqlShowCreateModel.java →
-                # ShowCreateUtil.buildShowCreateModelRow): CREATE MODEL
-                # name, INPUT/OUTPUT schema lines, WITH options — secret
-                # option values masked like connections
-                from flink_spark.connections import (
-                    MASKED_VALUE,
-                    SENSITIVE_FIELD_NAMES,
+            if dmm.group("ext"):
+                opts = rows_df(
+                    self.spark, [(f"option:{k}", str(v), True, False)
+                     for k, v in sorted(spec.options.items())],
+                    out.schema,
                 )
+                out = out.unionByName(opts)
+            return out
+        return NotImplemented
 
-                name = scm.group("name")
-                spec = self.model_manager.models.get(name)
-                if spec is None:
-                    raise ValueError(
-                        f"Model with the identifier '{name}' doesn't exist."
-                    )
-                lines = [f"CREATE MODEL {name}"]
-                if spec.input_schema:
-                    lines.append(f"INPUT ({spec.input_schema})")
-                if spec.output_schema:
-                    lines.append(f"OUTPUT ({spec.output_schema})")
-                if spec.options:
-                    body = ",\n".join(
-                        f"  '{k}' = "
-                        f"'{MASKED_VALUE if k in SENSITIVE_FIELD_NAMES else v}'"
-                        for k, v in sorted(spec.options.items())
-                    )
-                    lines.append("WITH (\n" + body + "\n)")
-                return rows_df(
-                    self.spark, [("\n".join(lines),)], "ddl string"
+    def _sql_materialized(self, st: "_Statement"):
+        stmt = st.text
+        from flink_spark.materialized import (
+            MT_ALTER_RE,
+            MT_CREATE_RE,
+            MT_DROP_RE,
+        )
+
+        scmt = re.match(
+            r"^\s*SHOW\s+CREATE\s+MATERIALIZED\s+TABLE\s+"
+            r"(?P<name>[\w.]+)\s*$",
+            stmt, re.IGNORECASE,
+        )
+        if scmt:
+            # SHOW CREATE MATERIALIZED TABLE (reference
+            # SqlShowCreateMaterializedTable.java → ShowCreateUtil.
+            # buildShowCreateMaterializedTableRow): PARTITIONED BY,
+            # FRESHNESS, REFRESH_MODE, AS query — re-executing the
+            # emitted DDL reproduces an equivalent table
+            name = scmt.group("name")
+            mt = self.materialized.tables.get(name)
+            if mt is None:
+                raise ValueError(
+                    f"materialized table {name!r} does not exist"
                 )
-            dmm = re.match(
-                r"^\s*(?:DESCRIBE|DESC)\s+MODEL\s+(?:(?P<ext>EXTENDED)\s+)?"
-                r"(?P<name>[\w.]+)\s*$",
-                stmt, re.IGNORECASE,
+            lines = [f"CREATE MATERIALIZED TABLE {name}"]
+            if (mt.schema_cols is not None or mt.watermark
+                    or mt.primary_key):
+                # declared schema block (reference ShowCreateUtil
+                # renders the full resolved schema; ours re-executes
+                # through the CREATE-merge path)
+                vtypes = {
+                    f.name: f.dataType.simpleString().upper()
+                    for f in self.spark.table(name).schema.fields
+                }
+                parts = []
+                for c in (mt.schema_cols or []):
+                    if c["kind"] == "computed":
+                        p = f"{c['name']} AS {c['expr']}"
+                    else:
+                        typ = (c.get("type")
+                               or vtypes.get(c["name"], "STRING"))
+                        p = f"{c['name']} {typ}"
+                        if c.get("notnull"):
+                            p += " NOT NULL"
+                        if c["kind"] == "metadata":
+                            p += " METADATA"
+                            if c.get("mdkey"):
+                                p += f" FROM '{c['mdkey']}'"
+                            if c.get("virtual"):
+                                p += " VIRTUAL"
+                    if c.get("comment"):
+                        p += f" COMMENT '{c['comment']}'"
+                    parts.append(p)
+                if mt.watermark:
+                    parts.append(
+                        f"WATERMARK FOR {mt.watermark[0]} "
+                        f"AS {mt.watermark[1]}"
+                    )
+                if mt.primary_key:
+                    cname, pcols = mt.primary_key
+                    pk = (f"CONSTRAINT {cname} " if cname else "")
+                    parts.append(
+                        pk + f"PRIMARY KEY ({', '.join(pcols)}) "
+                        "NOT ENFORCED"
+                    )
+                lines.append("(" + ", ".join(parts) + ")")
+            if mt.partition_keys:
+                lines.append(
+                    f"PARTITIONED BY ({', '.join(mt.partition_keys)})"
+                )
+            if mt.dist_keys and mt.dist_buckets:
+                lines.append(
+                    f"DISTRIBUTED BY ({', '.join(mt.dist_keys)}) "
+                    f"INTO {mt.dist_buckets} BUCKETS"
+                )
+            if mt.options:
+                lines.append(
+                    "WITH ("
+                    + ", ".join(f"'{k}' = '{v}'"
+                                for k, v in sorted(mt.options.items()))
+                    + ")"
+                )
+            fsec = mt.freshness_sec
+            fstr = (str(int(fsec)) if float(fsec).is_integer()
+                    else str(fsec))
+            lines.append(f"FRESHNESS = INTERVAL '{fstr}' SECOND")
+            lines.append(f"REFRESH_MODE = {mt.refresh_mode.upper()}")
+            lines.append(f"AS {mt.as_query}")
+            return rows_df(
+                self.spark, [("\n".join(lines),)], "ddl string"
             )
-            if dmm:
-                # DESCRIBE MODEL [EXTENDED] (reference
-                # DescribeModelOperation.java: input then output schema
-                # columns as (name, type, null, is input) rows)
-                from flink_spark.sqltok import split_top_commas
+        from flink_spark.materialized import extract_schema_block
 
-                name = dmm.group("name")
-                spec = self.model_manager.models.get(name)
-                if spec is None:
+        base_stmt, mt_schema = extract_schema_block(stmt)
+        cm = MT_CREATE_RE.match(base_stmt)
+        if cm:
+            name = cm.group("name")
+            if name in self.tables:
+                # converting a REGULAR table (reference
+                # materialized-table/statements.md "Converting a
+                # Table to a Materialized Table"): one-way, only via
+                # CREATE OR ALTER, and only when the conversion
+                # option was set at session initialization
+                if not cm.group("oralter"):
                     raise ValueError(
-                        f"Model with the identifier '{name}' doesn't exist."
+                        f"Object '{name}' already exists as a table; "
+                        "use CREATE OR ALTER MATERIALIZED TABLE to "
+                        "convert it"
                     )
-                rows = []
-                for schema, is_input in (
-                    (spec.input_schema, True),
-                    (spec.output_schema, False),
-                ):
-                    for colspec in split_top_commas(schema or ""):
-                        toks = colspec.split(None, 1)
-                        if len(toks) == 2:
-                            rows.append(
-                                (toks[0], toks[1].upper(), True, is_input)
-                            )
-                out = rows_df(
-                    self.spark, rows,
-                    "name string, type string, `null` boolean, "
-                    "`is input` boolean",
-                )
-                if dmm.group("ext"):
-                    opts = rows_df(
-                        self.spark, [(f"option:{k}", str(v), True, False)
-                         for k, v in sorted(spec.options.items())],
-                        out.schema,
+                if not self._mt_conversion_enabled:
+                    raise ValueError(
+                        f"Cannot convert table {name!r} to a "
+                        "materialized table: set 'table."
+                        "materialized-table.conversion-from-table."
+                        "enabled' = 'true' in the session's INITIAL "
+                        "configuration (the option is read at "
+                        "session initialization; a later SET has no "
+                        "effect)"
                     )
-                    out = out.unionByName(opts)
+                # the object keeps its identity; its kind becomes
+                # materialized table and the definition comes solely
+                # from this statement — but the registry entry is
+                # removed (and its persisted spec unpersisted) only
+                # AFTER create succeeds; a failing conversion leaves
+                # the regular table intact, re-registering its view
+                # in case create's refresh had already repointed it
+                spec0 = self.tables[name]
+                try:
+                    out = self.materialized.create(
+                        cm, schema_text=mt_schema
+                    )
+                except BaseException:
+                    # one source of truth for re-exposing a regular
+                    # table (handles managed-bucketed + sink-only)
+                    self._refresh_view(spec0)
+                    raise
+                del self.tables[name]
+                self._unpersist_spec(name)
                 return out
-        if "ML_PREDICT" in up:
-            from flink_spark.models import ML_PREDICT_RE
+            return self.materialized.create(cm, schema_text=mt_schema)
+        am = MT_ALTER_RE.match(stmt)
+        if am:
+            return self.materialized.alter(am)
+        from flink_spark.materialized import (
+            MT_ALTER_DROP_SCHEMA_RE,
+            MT_ALTER_EXT_RE,
+            MT_ALTER_SCHEMA_RE,
+        )
 
-            if ML_PREDICT_RE.search(masked):
-                stmt = self.model_manager.rewrite_ml_predict(stmt)
-                masked = mask_literals(stmt)
-        if "ML_EVALUATE" in up:
-            # reference SqlMLEvaluateTableFunction.java (parser-only
-            # there; executable here — see models.rewrite_ml_evaluate)
-            from flink_spark.models import ML_EVALUATE_RE
+        amx = MT_ALTER_EXT_RE.match(stmt)
+        if amx:
+            return self.materialized.alter_extended(amx)
+        ams = MT_ALTER_SCHEMA_RE.match(stmt)
+        if ams:
+            return self.materialized.alter_schema(ams)
+        amd = MT_ALTER_DROP_SCHEMA_RE.match(stmt)
+        if amd:
+            return self.materialized.alter_drop_schema(amd)
+        dm = MT_DROP_RE.match(stmt)
+        if dm:
+            return self.materialized.drop(dm)
+        return NotImplemented
 
-            if ML_EVALUATE_RE.search(masked):
-                stmt = self.model_manager.rewrite_ml_evaluate(stmt)
-                masked = mask_literals(stmt)
-        if "OBJECT_" in up:
-            # structured-type constructors (FLIP-520; reference
-            # BuiltInFunctionDefinitions OBJECT_OF / OBJECT_UPDATE) —
-            # rewritten onto named_struct (flink_spark/functions/objects.py)
-            from flink_spark.functions.objects import (
-                _OBJ_FN_RE,
-                rewrite_object_functions,
-            )
+    def _sql_session_window(self, st: "_Statement"):
+        sm = search_outside_literals(self._SESSION_TVF_RE, st.text)
+        if sm:
+            return self._rewrite_session_tvf(sm)
+        return NotImplemented
 
-            if _OBJ_FN_RE.search(masked):
-                stmt = rewrite_object_functions(stmt)
-                masked = mask_literals(stmt)
-                up = masked.upper()
-        if "MATERIALIZED" in up:
-            from flink_spark.materialized import (
-                MT_ALTER_RE,
-                MT_CREATE_RE,
-                MT_DROP_RE,
-            )
-
-            scmt = re.match(
-                r"^\s*SHOW\s+CREATE\s+MATERIALIZED\s+TABLE\s+"
-                r"(?P<name>[\w.]+)\s*$",
-                stmt, re.IGNORECASE,
-            )
-            if scmt:
-                # SHOW CREATE MATERIALIZED TABLE (reference
-                # SqlShowCreateMaterializedTable.java → ShowCreateUtil.
-                # buildShowCreateMaterializedTableRow): PARTITIONED BY,
-                # FRESHNESS, REFRESH_MODE, AS query — re-executing the
-                # emitted DDL reproduces an equivalent table
-                name = scmt.group("name")
-                mt = self.materialized.tables.get(name)
-                if mt is None:
-                    raise ValueError(
-                        f"materialized table {name!r} does not exist"
-                    )
-                lines = [f"CREATE MATERIALIZED TABLE {name}"]
-                if (mt.schema_cols is not None or mt.watermark
-                        or mt.primary_key):
-                    # declared schema block (reference ShowCreateUtil
-                    # renders the full resolved schema; ours re-executes
-                    # through the CREATE-merge path)
-                    vtypes = {
-                        f.name: f.dataType.simpleString().upper()
-                        for f in self.spark.table(name).schema.fields
-                    }
-                    parts = []
-                    for c in (mt.schema_cols or []):
-                        if c["kind"] == "computed":
-                            p = f"{c['name']} AS {c['expr']}"
-                        else:
-                            typ = (c.get("type")
-                                   or vtypes.get(c["name"], "STRING"))
-                            p = f"{c['name']} {typ}"
-                            if c.get("notnull"):
-                                p += " NOT NULL"
-                            if c["kind"] == "metadata":
-                                p += " METADATA"
-                                if c.get("mdkey"):
-                                    p += f" FROM '{c['mdkey']}'"
-                                if c.get("virtual"):
-                                    p += " VIRTUAL"
-                        if c.get("comment"):
-                            p += f" COMMENT '{c['comment']}'"
-                        parts.append(p)
-                    if mt.watermark:
-                        parts.append(
-                            f"WATERMARK FOR {mt.watermark[0]} "
-                            f"AS {mt.watermark[1]}"
-                        )
-                    if mt.primary_key:
-                        cname, pcols = mt.primary_key
-                        pk = (f"CONSTRAINT {cname} " if cname else "")
-                        parts.append(
-                            pk + f"PRIMARY KEY ({', '.join(pcols)}) "
-                            "NOT ENFORCED"
-                        )
-                    lines.append("(" + ", ".join(parts) + ")")
-                if mt.partition_keys:
-                    lines.append(
-                        f"PARTITIONED BY ({', '.join(mt.partition_keys)})"
-                    )
-                if mt.dist_keys and mt.dist_buckets:
-                    lines.append(
-                        f"DISTRIBUTED BY ({', '.join(mt.dist_keys)}) "
-                        f"INTO {mt.dist_buckets} BUCKETS"
-                    )
-                if mt.options:
-                    lines.append(
-                        "WITH ("
-                        + ", ".join(f"'{k}' = '{v}'"
-                                    for k, v in sorted(mt.options.items()))
-                        + ")"
-                    )
-                fsec = mt.freshness_sec
-                fstr = (str(int(fsec)) if float(fsec).is_integer()
-                        else str(fsec))
-                lines.append(f"FRESHNESS = INTERVAL '{fstr}' SECOND")
-                lines.append(f"REFRESH_MODE = {mt.refresh_mode.upper()}")
-                lines.append(f"AS {mt.as_query}")
-                return rows_df(
-                    self.spark, [("\n".join(lines),)], "ddl string"
-                )
-            from flink_spark.materialized import extract_schema_block
-
-            base_stmt, mt_schema = extract_schema_block(stmt)
-            cm = MT_CREATE_RE.match(base_stmt)
-            if cm:
-                name = cm.group("name")
-                if name in self.tables:
-                    # converting a REGULAR table (reference
-                    # materialized-table/statements.md "Converting a
-                    # Table to a Materialized Table"): one-way, only via
-                    # CREATE OR ALTER, and only when the conversion
-                    # option was set at session initialization
-                    if not cm.group("oralter"):
-                        raise ValueError(
-                            f"Object '{name}' already exists as a table; "
-                            "use CREATE OR ALTER MATERIALIZED TABLE to "
-                            "convert it"
-                        )
-                    if not self._mt_conversion_enabled:
-                        raise ValueError(
-                            f"Cannot convert table {name!r} to a "
-                            "materialized table: set 'table."
-                            "materialized-table.conversion-from-table."
-                            "enabled' = 'true' in the session's INITIAL "
-                            "configuration (the option is read at "
-                            "session initialization; a later SET has no "
-                            "effect)"
-                        )
-                    # the object keeps its identity; its kind becomes
-                    # materialized table and the definition comes solely
-                    # from this statement — but the registry entry is
-                    # removed (and its persisted spec unpersisted) only
-                    # AFTER create succeeds; a failing conversion leaves
-                    # the regular table intact, re-registering its view
-                    # in case create's refresh had already repointed it
-                    spec0 = self.tables[name]
-                    try:
-                        out = self.materialized.create(
-                            cm, schema_text=mt_schema
-                        )
-                    except BaseException:
-                        # one source of truth for re-exposing a regular
-                        # table (handles managed-bucketed + sink-only)
-                        self._refresh_view(spec0)
-                        raise
-                    del self.tables[name]
-                    self._unpersist_spec(name)
-                    return out
-                return self.materialized.create(cm, schema_text=mt_schema)
-            am = MT_ALTER_RE.match(stmt)
-            if am:
-                return self.materialized.alter(am)
-            from flink_spark.materialized import (
-                MT_ALTER_DROP_SCHEMA_RE,
-                MT_ALTER_EXT_RE,
-                MT_ALTER_SCHEMA_RE,
-            )
-
-            amx = MT_ALTER_EXT_RE.match(stmt)
-            if amx:
-                return self.materialized.alter_extended(amx)
-            ams = MT_ALTER_SCHEMA_RE.match(stmt)
-            if ams:
-                return self.materialized.alter_schema(ams)
-            amd = MT_ALTER_DROP_SCHEMA_RE.match(stmt)
-            if amd:
-                return self.materialized.alter_drop_schema(amd)
-            dm = MT_DROP_RE.match(stmt)
-            if dm:
-                return self.materialized.drop(dm)
-        if self._LEGACY_GW_RE.search(masked):
-            # legacy group-window SQL (reference
-            # StreamExecGroupWindowAggregate.java:113 — the pre-TVF
-            # `GROUP BY TUMBLE/HOP/SESSION(ts, INTERVAL ...)` spelling with
-            # TUMBLE_START/_END accessors). Rewritten onto Spark's native
-            # window()/session_window() grouping, which is exactly what the
-            # TVF path lowers to — old Flink SQL corpora run unchanged.
-            stmt = self._rewrite_legacy_group_windows(stmt)
-            masked = mask_literals(stmt)
-            up = masked.upper()
-        if self._TVF_RE.search(masked):
-            stmt = self._rewrite_window_tvfs(stmt)
-            masked = mask_literals(stmt)
-        if "SESSION" in up:
-            from flink_spark.sqltok import search_outside_literals
-
-            sm = search_outside_literals(self._SESSION_TVF_RE, stmt)
-            if sm:
-                return self._rewrite_session_tvf(sm)
-        if "JSON_TABLE" in up:
-            # SQL:2016 JSON_TABLE (reference JSON shredding table fn):
-            # rewrite each FROM-item into a shredded temp view
-            from flink_spark.functions.jsontable import (
-                JSON_TABLE_RE,
-                rewrite_json_table,
-            )
-
-            if JSON_TABLE_RE.search(masked):
-                stmt = sub_outside_literals(
-                    JSON_TABLE_RE,
-                    lambda m: rewrite_json_table(self.spark, m),
-                    stmt,
-                )
-                masked = mask_literals(stmt)
+    def _sql_time_travel(self, st: "_Statement"):
         # time-travel read over a materialized table's snapshot store
         # (reference SqlSnapshot time travel: FOR SYSTEM_TIME AS OF a
         # LITERAL timestamp / FOR SYSTEM_VERSION AS OF n — distinct from
@@ -3666,7 +3453,7 @@ class TableEnvironment:
             r"^\s*SELECT\s+\*\s+FROM\s+(?P<name>[\w.]+)\s+FOR\s+SYSTEM_"
             r"(?:(?:TIME\s+AS\s+OF\s+TIMESTAMP\s*'(?P<ts>[^']+)')|"
             r"(?:VERSION\s+AS\s+OF\s+(?P<v>\d+)))\s*$",
-            stmt, re.IGNORECASE,
+            st.text, re.IGNORECASE,
         )
         if tt and self._materialized is not None \
                 and tt.group("name") in self.materialized.tables:
@@ -3691,68 +3478,30 @@ class TableEnvironment:
                     pass  # unknown zone id → process-local fallback
             ts = parsed.timestamp()
             return self.materialized.read_version(tt.group("name"), as_of_ts=ts)
-        tm = self._TEMPORAL_RE.match(stmt)
-        if tm and "FOR SYSTEM_TIME" in masked.upper():
+        return NotImplemented
+
+    def _sql_temporal_join(self, st: "_Statement"):
+        tm = self._TEMPORAL_RE.match(st.text)
+        if tm:
             return self._rewrite_temporal_join(tm)
-        if "LATERAL TABLE" in masked.upper():
-            lm = self._LATERAL_TTF_RE.match(stmt)
-            if lm and lm.group("fn") in self.temporal_fns:
-                return self._rewrite_lateral_ttf(lm)
-        if "MATCH_RECOGNIZE" in masked.upper():
-            from flink_spark.sql_match import MATCH_RE, rewrite_match_recognize
+        return NotImplemented
 
-            mr = MATCH_RE.match(stmt)
-            if mr:
-                return rewrite_match_recognize(self.spark, mr)
-        if "/*+" in stmt and "OPTIONS" in stmt.upper():
-            # NOTE: gate on the ORIGINAL text — the masked view blanks
-            # comments, which is exactly where this hint lives
-            # dynamic table options (reference FlinkHints OPTIONS hint /
-            # SqlTableRef: `FROM t /*+ OPTIONS('k'='v') */` overrides the
-            # declared WITH options for THIS query only). The hint lives
-            # in a comment, so it is read from the ORIGINAL text (the
-            # masked view blanks comments by design) and replaced by a
-            # temp view over the re-opened source.
-            hint_re = re.compile(
-                r"(?P<tbl>[\w.]+)\s*/\*\+\s*OPTIONS\s*\("
-                r"(?P<opts>[^)]*)\)\s*\*/",
-                re.IGNORECASE,
-            )
+    def _sql_lateral_table(self, st: "_Statement"):
+        lm = self._LATERAL_TTF_RE.match(st.text)
+        if lm and lm.group("fn") in self.temporal_fns:
+            return self._rewrite_lateral_ttf(lm)
+        return NotImplemented
 
-            def _apply_hint(hm: re.Match) -> str:
-                tbl = hm.group("tbl")
-                if tbl not in self.tables:
-                    return hm.group(0)  # not ours — leave for Spark
-                src0 = self.tables[tbl]
-                opts = dict(src0.options)
-                opts.update({
-                    m2.group("k"): m2.group("v")
-                    for m2 in _OPT_RE.finditer(hm.group("opts"))
-                })
-                for guard in ("connector", "path"):
-                    if opts.get(guard) != src0.options.get(guard):
-                        raise ValueError(
-                            f"OPTIONS hint cannot change {guard!r}"
-                        )
-                tmp = TableSpec(
-                    name=tbl, columns=list(src0.columns), options=opts,
-                    watermark=src0.watermark,
-                    watermark_kind=src0.watermark_kind,
-                    primary_key=list(src0.primary_key),
-                )
-                view = f"__opts_{tbl}_{_det_digest(*sorted(opts.items()))}"
-                df = self._source_df(tmp)
-                if df is None:
-                    raise ValueError(
-                        f"OPTIONS hint: table {tbl!r} is not readable"
-                    )
-                df.createOrReplaceTempView(view)
-                return view
+    def _sql_match_recognize(self, st: "_Statement"):
+        from flink_spark.sql_match import MATCH_RE, rewrite_match_recognize
 
-            new_stmt = hint_re.sub(_apply_hint, stmt)
-            if new_stmt != stmt:
-                stmt = new_stmt
-                masked = mask_literals(stmt)
+        mr = MATCH_RE.match(st.text)
+        if mr:
+            return rewrite_match_recognize(self.spark, mr)
+        return NotImplemented
+
+    def _sql_create_table(self, st: "_Statement"):
+        stmt = st.text
         lk = _LIKE_RE.match(stmt)
         if lk and lk.group("src") in self.tables:
             # CREATE TABLE ... LIKE (reference SqlTableLike.java): clone
@@ -3837,7 +3586,10 @@ class TableEnvironment:
                 ctas["query"],
                 replace=bool(ctas["replace"]),
             )
-        sm = _SET_RE.match(stmt)
+        return NotImplemented
+
+    def _sql_set(self, st: "_Statement"):
+        sm = _SET_RE.match(st.text)
         if sm:
             # SET 'k' = 'v' / SET (list) / RESET 'k' / RESET (reference
             # SqlSet.java, SqlReset.java → session conf). Well-known
@@ -3872,6 +3624,10 @@ class TableEnvironment:
                 prepare_session(self.spark)
                 return None
             return self.spark.sql("SET")
+        return NotImplemented
+
+    def _sql_job(self, st: "_Statement"):
+        stmt = st.text
         if re.match(r"^\s*SHOW\s+JOBS\s*$", stmt, re.IGNORECASE):
             # reference SqlShowJobs: list active streaming queries
             rows = [
@@ -3911,6 +3667,10 @@ class TableEnvironment:
                     q.stop()
                     return None
             raise ValueError(f"no active job {stop.group('jid')!r}")
+        return NotImplemented
+
+    def _sql_view(self, st: "_Statement"):
+        stmt = st.text
         vm = re.match(
             r"^\s*CREATE\s+(?P<rep>OR\s+REPLACE\s+)?(?P<temp>TEMPORARY\s+)?"
             r"VIEW\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<name>[\w.]+)\s*"
@@ -4057,9 +3817,12 @@ class TableEnvironment:
                 parts.append(f"COMMENT '{d['comment']}'")
             ddl = " ".join(parts) + f" AS {d['query']}"
             return rows_df(self.spark, [(ddl,)], "ddl string")
+        return NotImplemented
+
+    def _sql_show_create_table(self, st: "_Statement"):
         sct = re.match(
             r"^\s*SHOW\s+CREATE\s+TABLE\s+(?P<name>[\w.]+)\s*$",
-            stmt,
+            st.text,
             re.IGNORECASE,
         )
         if sct and sct.group("name") in self.tables:
@@ -4096,8 +3859,11 @@ class TableEnvironment:
                 f"WITH ({opts})"
             )
             return rows_df(self.spark, [(ddl,)], "ddl string")
+        return NotImplemented
+
+    def _sql_truncate(self, st: "_Statement"):
         tr = re.match(
-            r"^\s*TRUNCATE\s+TABLE\s+(?P<name>[\w.]+)\s*$", stmt, re.IGNORECASE
+            r"^\s*TRUNCATE\s+TABLE\s+(?P<name>[\w.]+)\s*$", st.text, re.IGNORECASE
         )
         if tr and tr.group("name") in self.tables:
             # reference SqlTruncateTable: drop the data, keep the table
@@ -4118,10 +3884,13 @@ class TableEnvironment:
                 self.spark, [], spec.ddl_schema()
             ).createOrReplaceTempView(spec.name)
             return None
+        return NotImplemented
+
+    def _sql_analyze(self, st: "_Statement"):
         an = re.match(
             r"^\s*ANALYZE\s+TABLE\s+(?P<name>[\w.]+)\s+COMPUTE\s+STATISTICS"
             r"(?:\s+FOR\s+COLUMNS\s+(?P<cols>[\w,\s]+))?\s*$",
-            stmt,
+            st.text,
             re.IGNORECASE,
         )
         if an:
@@ -4145,18 +3914,24 @@ class TableEnvironment:
                     F.count(F.when(F.col(c).isNull(), 1)).alias(f"{c}_nulls"),
                 ]
             return df.agg(*aggs)
+        return NotImplemented
+
+    def _sql_describe(self, st: "_Statement"):
         dm = re.match(
             r"^\s*(?:DESCRIBE|DESC)\s+(?:EXTENDED\s+)?(?P<name>[\w.]+)\s*$",
-            stmt, re.IGNORECASE,
+            st.text, re.IGNORECASE,
         )
         if dm and dm.group("name") in self.tables:
             # Flink-shaped DESCRIBE (reference DESCRIBE output columns
             # name/type/null/key/extras/watermark — richer than Spark's,
             # which cannot show watermark or NOT ENFORCED keys)
             return self._columns_df(dm.group("name"))
+        return NotImplemented
+
+    def _sql_show_columns(self, st: "_Statement"):
         sc = re.match(
             r"^\s*SHOW\s+COLUMNS\s+(?:FROM|IN)\s+(?P<name>[\w.]+)\s*$",
-            stmt, re.IGNORECASE,
+            st.text, re.IGNORECASE,
         )
         if sc:
             # SHOW COLUMNS (FROM|IN) t (reference SqlShowColumns.java,
@@ -4164,77 +3939,66 @@ class TableEnvironment:
             # name/type/null/key/extras/watermark; the generic
             # SHOW ... [NOT] LIKE wrapper above supplies name filtering)
             return self._columns_df(sc.group("name"))
-        if re.match(r"^\s*(SHOW|DESCRIBE|DESC)\b", stmt, re.IGNORECASE):
-            return self.spark.sql(stmt)
-        im = re.match(
-            r"^\s*INSERT\s+(?P<mode>INTO|OVERWRITE)\s+(?P<name>[\w.]+)\s+"
-            r"(?:\(\s*(?P<collist>\w+(?:\s*,\s*\w+)*)\s*\)\s+)?"
-            r"(?:PARTITION\s*\(\s*(?P<pcol>\w+)\s*=\s*'(?P<pval>[^']*)'\s*\)\s+)?"
-            r"(?P<query>.*)$",
-            stmt,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if im and im.group("name") in self.tables:
-            df = self.spark.sql(im.group("query"))
-            if im.group("collist"):
-                # explicit column list (reference SqlInsert column list):
-                # the query's output maps positionally onto the NAMED
-                # columns; unnamed declared columns are null-filled
-                from pyspark.sql import functions as F
+        return NotImplemented
 
-                spec0 = self.tables[im.group("name")]
-                named = [c.strip() for c in im.group("collist").split(",")]
-                declared = {c: t for c, t in spec0.columns}
-                unknown = [c for c in named if c not in declared]
-                if unknown:
-                    raise ValueError(
-                        f"INSERT column list names unknown columns {unknown}"
-                    )
-                if len(df.columns) != len(named):
-                    raise ValueError(
-                        f"INSERT column list has {len(named)} columns but "
-                        f"the query produces {len(df.columns)}"
-                    )
-                df = df.toDF(*named)
-                pcol_v = im.group("pcol")
-                for c, t in spec0.columns:
-                    if c not in named and c != pcol_v:
-                        df = df.withColumn(c, F.lit(None).cast(_map_type(t)))
-            if im.group("pcol"):
-                # static partition insert (reference SqlPartitionUtils /
-                # INSERT ... PARTITION): the partition column is a
-                # constant, cast to the declared column type
-                spec0 = self.tables[im.group("name")]
-                ptype = dict(spec0.columns).get(im.group("pcol"), "STRING")
-                from pyspark.sql import functions as F
+    def _sql_insert(self, st: "_Statement"):
+        head = st.insert
+        if head is None or head["name"] not in self.tables:
+            return NotImplemented
+        from pyspark.sql import functions as F
 
-                df = df.withColumn(
-                    im.group("pcol"),
-                    F.lit(im.group("pval")).cast(ptype),
+        name, collist, part = head["name"], head["cols"], head["part"]
+        spec0 = self.tables[name]
+        declared = [c for c, _ in spec0.columns]
+        pcol = None
+        if part is not None:
+            pm = re.fullmatch(r"\s*(\w+)\s*=\s*'([^']*)'\s*", part)
+            if pm is None:
+                raise ValueError(
+                    f"INSERT INTO {name} PARTITION ({part}): only one static "
+                    "`column = 'value'` partition spec is supported"
                 )
-                if not im.group("collist"):
-                    # The query's columns are POSITIONAL (SQL semantics);
-                    # only the engine-appended partition column is named.
-                    # Rename the query columns onto the declared names
-                    # minus the partition column, in declared order, so
-                    # the by-name select below cannot silently remap a
-                    # user permutation (ADVICE r4).
-                    declared0 = [c for c, _ in spec0.columns]
-                    rest = [c for c in declared0 if c != im.group("pcol")]
-                    if len(df.columns) - 1 == len(rest):
-                        df = df.toDF(*rest, im.group("pcol"))
-            if im.group("collist") or im.group("pcol"):
-                # engine-constructed names → by-name alignment is safe
-                spec0 = self.tables[im.group("name")]
-                declared0 = [c for c, _ in spec0.columns]
-                if set(df.columns) == set(declared0):
-                    df = df.select(*declared0)
-            return self._insert(
-                im.group("name"),
-                df,
-                overwrite=im.group("mode").upper() == "OVERWRITE",
-            )
-        return self.spark.sql(stmt)
+            pcol, pval = pm.groups()
+        df = self.spark.sql(st.text[head["body"]:])
+        if collist:
+            # explicit column list (reference SqlInsert column list):
+            # the query's output maps positionally onto the NAMED
+            # columns; unnamed declared columns are null-filled
+            named = [c.strip() for c in collist.split(",")]
+            unknown = [c for c in named if c not in declared]
+            if unknown:
+                raise ValueError(
+                    f"INSERT column list names unknown columns {unknown}"
+                )
+            if len(df.columns) != len(named):
+                raise ValueError(
+                    f"INSERT column list has {len(named)} columns but "
+                    f"the query produces {len(df.columns)}"
+                )
+            df = df.toDF(*named)
+            for c, t in spec0.columns:
+                if c not in named and c != pcol:
+                    df = df.withColumn(c, F.lit(None).cast(_map_type(t)))
+        if pcol:
+            # static partition insert (reference SqlPartitionUtils /
+            # INSERT ... PARTITION): the partition column is a
+            # constant, cast to the declared column type
+            ptype = dict(spec0.columns).get(pcol, "STRING")
+            df = df.withColumn(pcol, F.lit(pval).cast(ptype))
+            if not collist:
+                # The query's columns are POSITIONAL (SQL semantics);
+                # only the engine-appended partition column is named.
+                # Rename the query columns onto the declared names
+                # minus the partition column, in declared order, so
+                # the by-name select below cannot silently remap a
+                # user permutation (ADVICE r4).
+                rest = [c for c in declared if c != pcol]
+                if len(df.columns) - 1 == len(rest):
+                    df = df.toDF(*rest, pcol)
+        if (collist or pcol) and set(df.columns) == set(declared):
+            # engine-constructed names → by-name alignment is safe
+            df = df.select(*declared)
+        return self._insert(name, df, overwrite=head["mode"] == "OVERWRITE")
 
     def _upsert_merge(self, spec: TableSpec, df: DataFrame) -> DataFrame:
         """Upsert sink semantics (reference SinkUpsertMaterializer / the
@@ -4408,14 +4172,12 @@ class TableEnvironment:
             # PARTITIONED BY (cols) (reference SqlCreateTable.java) is the
             # DDL spelling of the 'partition.keys' connector option.
             options["partition.keys"] = ",".join(partitioned)
-        from flink_spark.sqltok import mask_literals as _mask
-
         watermark = None
         wm_kind = "bounded"
         # match on the MASKED body (a column COMMENT may contain
         # watermark-shaped text) but edit the raw body by span — the mask
         # is length-preserving so spans map 1:1
-        mbody = _mask(body)
+        mbody = mask_literals(body)
         wm = _WATERMARK_RE.search(mbody)
         if wm:
             # <n> sits inside a quoted literal, blanked on the mask —
@@ -4451,7 +4213,7 @@ class TableEnvironment:
                     )
                 watermark = (col, "0 seconds")
                 body = body[: sm.start()] + body[sm.end():]
-        if re.search(r"\bWATERMARK\s+FOR\b", _mask(body), re.IGNORECASE):
+        if re.search(r"\bWATERMARK\s+FOR\b", mask_literals(body), re.IGNORECASE):
             # a WATERMARK clause neither regex consumed (general
             # expression form `AS ts + INTERVAL`, CAST-wrapped rowtime,
             # backticked column, ...): reject loudly — falling through
@@ -4697,55 +4459,36 @@ class TableEnvironment:
         Non-queries are rejected BEFORE anything executes (the reference
         sqlQuery throws 'only single queries accepted' at parse time) —
         a validate-after-execute would let sql_query('INSERT ...')
-        mutate state and then raise."""
-        from flink_spark.sqltok import mask_literals
+        mutate state and then raise.
 
-        masked = mask_literals(sql.strip().rstrip(";"))
-        head = masked.lstrip("( \t\n\r")
-        if not re.match(r"(?:SELECT|WITH|VALUES|TABLE)\b", head,
-                        re.IGNORECASE):
+        A WITH prologue can legally prefix DML (Spark grammar allows ctes
+        before dmlStatementNoWith), so the query-head test parses the CTE
+        prologue and inspects the verb that BEGINS the statement body, the
+        one depth-0 position where the grammar puts DML (a blanket verb
+        scan rejected legal identifiers: ADVICE r9, `SELECT 1 AS merge`).
+        An unparseable prologue falls back to a conservative depth-0 scan
+        rather than letting anything through."""
+        st = _Statement(sql)
+        ok = st.is_query
+        if ok is None:
+            depth, ok = 0, True
+            for m in re.finditer(
+                r"[()]|\b(?:INSERT|DELETE|UPDATE|MERGE)\b", st.masked,
+                re.IGNORECASE,
+            ):
+                tok = m.group(0)
+                if tok == "(":
+                    depth += 1
+                elif tok == ")":
+                    depth -= 1
+                elif depth == 0:
+                    ok = False
+                    break
+        if not ok:
             raise ValueError(
                 "sql_query expects a query (SELECT/WITH/VALUES/TABLE); "
                 "use execute_sql for statements"
             )
-        # a WITH prologue can legally prefix DML (Spark grammar allows
-        # ctes before dmlStatementNoWith), so the head check alone would
-        # let sql_query("WITH c AS (...) INSERT INTO t ...") execute.
-        # For every other accepted head (SELECT/VALUES/TABLE, or a
-        # parenthesized query) no grammar production reaches DML, and a
-        # blanket depth-0 verb scan rejected legal bare identifiers
-        # named insert/update/delete/merge (ADVICE r9: `SELECT 1 AS
-        # merge`) — so parse the CTE prologue and inspect only the verb
-        # that BEGINS the statement body, the one depth-0 position where
-        # the grammar puts DML. An unparseable prologue falls back to
-        # the conservative depth-0 scan rather than letting anything
-        # through.
-        if re.match(r"WITH\b", head, re.IGNORECASE):
-            verb = _with_body_verb(head)
-            if verb is not None:
-                if verb.upper() in ("INSERT", "DELETE", "UPDATE",
-                                    "MERGE"):
-                    raise ValueError(
-                        "sql_query expects a query (SELECT/WITH/VALUES/"
-                        "TABLE); use execute_sql for statements"
-                    )
-            else:
-                depth = 0
-                for m in re.finditer(
-                    r"[()]|\b(?:INSERT|DELETE|UPDATE|MERGE)\b", masked,
-                    re.IGNORECASE,
-                ):
-                    tok = m.group(0)
-                    if tok == "(":
-                        depth += 1
-                    elif tok == ")":
-                        depth -= 1
-                    elif depth == 0:
-                        raise ValueError(
-                            "sql_query expects a query (SELECT/WITH/"
-                            "VALUES/TABLE); use execute_sql for "
-                            "statements"
-                        )
         out = self.execute_sql(sql)
         if not isinstance(out, DataFrame):  # defensive: rewrites routed
             raise ValueError(  # the query somewhere sink-shaped
@@ -5020,8 +4763,6 @@ def _rewrite_nonconjunctive_not_in(stmt: str) -> str:
     8 scan nodes, 0 ReusedSubquery) — but the two guard branches
     collapse to tiny uncorrelated EXISTS reductions (sf1 1.67x,
     plan-audited: 0 CartesianProduct)."""
-    from flink_spark.sqltok import mask_literals
-
     masked = mask_literals(stmt)
     depth: list[int] = []
     d = 0
@@ -5259,8 +5000,6 @@ def _rewrite_quantified_cmp(stmt: str) -> str:
     shape — the depth is intrinsic). Reference parity: Calcite
     decorrelates quantified comparisons natively (SqlQuantifyOperator;
     flink-table-planner SubQueryITCase)."""
-    from flink_spark.sqltok import mask_literals
-
     masked = mask_literals(stmt)
     accepted: list[tuple[int, int, str, str, str, str, int]] = []
     for m in _QCMP_RE.finditer(masked):
@@ -5356,6 +5095,270 @@ def _split_top_level(s: str) -> list[str]:
     if cur:
         out.append("".join(cur))
     return out
+
+
+# -- the statement router ------------------------------------------------------
+
+#: INSERT head (Flink/Spark grammar: INSERT INTO|OVERWRITE [TABLE] t
+#: [PARTITION (spec)] [(cols)] body; the column list may also precede the
+#: PARTITION clause). Matched on the literal-masked text; the body must
+#: start like a query, so a parenthesized body is never taken for a
+#: column list.
+_INSERT_HEAD_RE = re.compile(
+    r"\s*INSERT\s+(?P<mode>INTO|OVERWRITE)\s+(?:TABLE\s+)?"
+    r"(?P<name>(?:`[^`]*`|\w+)(?:\.(?:`[^`]*`|\w+))*)\s*"
+    r"(?:\((?P<cols>[^()]*)\)\s*)?"
+    r"(?:PARTITION\s*\((?P<part>[^()]*)\)\s*"
+    r"(?:\((?P<pcols>[^()]*)\)\s*)?)?"
+    r"(?=(?:SELECT|WITH|VALUES|TABLE)\b|\()",
+    re.IGNORECASE,
+)
+
+
+def _insert_head(text: str, masked: str) -> dict | None:
+    """The parsed INSERT head of ``text`` (``masked`` is its literal mask):
+    mode, target name, column list and partition spec as ORIGINAL text,
+    and ``body``, the offset where the query starts. None when the
+    statement is not an INSERT this grammar reads."""
+    m = _INSERT_HEAD_RE.match(masked)
+    if not m:
+        return None
+
+    def raw(g: str) -> str | None:
+        return None if m.start(g) < 0 else text[m.start(g) : m.end(g)]
+
+    return {
+        "mode": m.group("mode").upper(),
+        "name": raw("name"),
+        "cols": raw("cols") if m.start("cols") >= 0 else raw("pcols"),
+        "part": raw("part"),
+        "body": m.end(),
+    }
+
+
+def _query_head(masked: str) -> bool | None:
+    """Whether a literal-masked statement is a query: True for a
+    SELECT/VALUES/TABLE head (parentheses allowed) or a WITH whose body
+    verb is not DML, False otherwise, None for a WITH prologue that does
+    not parse (callers decide how conservative to be)."""
+    head = masked.lstrip("( \t\n\r")
+    if re.match(r"(?:SELECT|VALUES|TABLE)\b", head, re.IGNORECASE):
+        return True
+    if not re.match(r"WITH\b", head, re.IGNORECASE):
+        return False
+    verb = _with_body_verb(head)
+    if verb is None:
+        return None
+    return verb.upper() not in ("INSERT", "DELETE", "UPDATE", "MERGE")
+
+
+class _Statement:
+    """One statement as the router sees it, classified once: the text
+    (rewritten in place), its literal mask (same length, so every span
+    maps 1:1), the query-head test, the kind (the leading keyword, or
+    ``QUERY``) and the INSERT head."""
+
+    def __init__(self, sql: str):
+        self.set_text(sql.strip().rstrip(";"))
+        self.is_query = _query_head(self.masked)
+        first = re.match(r"\s*([A-Za-z_]\w*)", self.masked)
+        self.kind = (
+            "QUERY" if self.is_query
+            else first.group(1).upper() if first else ""
+        )
+
+    def set_text(self, text: str) -> None:
+        self.text = text
+        self.masked = mask_literals(text)
+        self.insert = _insert_head(text, self.masked)
+
+    @property
+    def query_start(self) -> int | None:
+        """Offset of the statement's query: 0 for a query, the body of an
+        INSERT whose body is a query, else None."""
+        if self.is_query:
+            return 0
+        if self.insert and _query_head(self.masked[self.insert["body"]:]):
+            return self.insert["body"]
+        return None
+
+
+def _found(rx: re.Pattern):
+    """Gate: ``rx`` matches the masked statement."""
+    return lambda env, st: rx.search(st.masked) is not None
+
+
+def _mod(name: str):
+    """A dialect module of the engine, imported on first use."""
+    import importlib
+
+    return importlib.import_module(f"flink_spark.{name}")
+
+
+def _in_query(rx: re.Pattern):
+    """Gate: ``rx`` matches inside the statement's query span."""
+    return lambda env, st: (
+        st.query_start is not None
+        and rx.search(st.masked, st.query_start) is not None
+    )
+
+
+def _not_explain(gate):
+    return lambda env, st: st.kind != "EXPLAIN" and gate(env, st)
+
+
+#: The in-place query-text rewrites, in application order, as
+#: (name, gate(env, st), rewrite(env, st) -> text). The order is a
+#: correctness condition. The quantified comparison runs before [NOT] IN:
+#: Spark cannot parse ANY/SOME/ALL, so a NOT IN analysis probe on text
+#: still holding one would always fail and drop that fix. And the
+#: rewrites run before EXPLAIN, VIEW, CTAS and INSERT dispatch, which
+#: hand the rewritten text on. _HANDLERS cuts the chain per handler.
+_REWRITES = (
+    # quantified subquery comparisons (ANY/SOME/ALL, reference
+    # SqlStdOperatorTable.SOME/ALL) onto EXISTS composites
+    ("quantified", _in_query(_QCMP_RE),
+     lambda env, st: env._probe_rewrite(st, _rewrite_quantified_cmp)),
+    # deviant-position [NOT] IN <subquery>: standard three-valued logic
+    # upstream Spark loses there
+    ("not_in", _in_query(re.compile(r"\bIN\s*\(", re.IGNORECASE)),
+     lambda env, st: env._probe_rewrite(st, _rewrite_nonconjunctive_not_in)),
+    # (tp1, t1) OVERLAPS (tp2, t2), both bounds inclusive (reference
+    # TemporalOverlapsConverter.java)
+    ("overlaps", _found(re.compile(r"\bOVERLAPS\b", re.IGNORECASE)),
+     lambda env, st: env._rewrite_overlaps(st.text)),
+    # GROUP_ID() (reference DecomposeGroupingSetsRule.java:369)
+    ("group_id", _found(TableEnvironment._GROUP_ID_RE),
+     lambda env, st: env._rewrite_group_id(st.text)),
+    # CAST to CHAR/VARCHAR/TIMESTAMP(n): pad/trim + precision truncation
+    # (reference CharVarCharTrimPadCastRule / TimestampToTimestampCastRule)
+    ("precision_casts", _found(re.compile(
+        r"\bAS\s+(?:CHAR|VARCHAR|TIMESTAMP(?:_LTZ)?)\s*\(\s*\d+\s*\)",
+        re.IGNORECASE,
+    )), lambda env, st: env._rewrite_precision_casts(st.text)),
+    # seeded RAND_INTEGER(seed, bound) onto RAND(seed)
+    ("rand_integer", _found(re.compile(r"\bRAND_INTEGER\s*\(",
+                                       re.IGNORECASE)),
+     lambda env, st: env._rewrite_rand_integer(st.text)),
+    # join hints (reference hints.md): NEST_LOOP mapping, LOOKUP option
+    # validation; hints live in comments, so the gate reads the text
+    ("join_hints",
+     lambda env, st: TableEnvironment._HINT_BLOCK_RE.search(st.text),
+     lambda env, st: env._rewrite_join_hints(st.text)),
+    # FROM_CHANGELOG / TO_CHANGELOG PTFs (reference changelog.md)
+    ("changelog_ptfs", _not_explain(_found(re.compile(
+        r"\b(?:FROM|TO)_CHANGELOG\b", re.IGNORECASE))),
+     lambda env, st: _mod("streaming.changelog_ptf")
+     .rewrite_changelog_ptfs(env.spark, st.text)),
+    # VECTOR_SEARCH TVF (reference StreamExecVectorSearchTableFunction)
+    ("vector_search", _not_explain(_found(re.compile(
+        r"\bVECTOR_SEARCH\b", re.IGNORECASE))),
+     lambda env, st: _mod("functions.vectorsearch")
+     .rewrite_vector_search(env.spark, st.text)),
+    # registered PROCESS TABLE FUNCTIONS (reference ptfs.md)
+    ("user_ptfs", lambda env, st: bool(getattr(env, "user_ptfs", None)),
+     lambda env, st: env._rewrite_user_ptfs(st.text, st.masked)),
+    # ML_PREDICT / ML_EVALUATE TVFs over catalog models
+    ("ml_predict", lambda env, st: _mod("models").ML_PREDICT_RE.search(
+        st.masked),
+     lambda env, st: env.model_manager.rewrite_ml_predict(st.text)),
+    ("ml_evaluate", lambda env, st: _mod("models").ML_EVALUATE_RE.search(
+        st.masked),
+     lambda env, st: env.model_manager.rewrite_ml_evaluate(st.text)),
+    # OBJECT_OF / OBJECT_UPDATE constructors (FLIP-520) onto named_struct
+    ("object_fns",
+     lambda env, st: _mod("functions.objects")._OBJ_FN_RE.search(st.masked),
+     lambda env, st: _mod("functions.objects")
+     .rewrite_object_functions(st.text)),
+    # legacy `GROUP BY TUMBLE/HOP/SESSION(ts, INTERVAL ...)` windows
+    # (reference StreamExecGroupWindowAggregate.java:113)
+    ("legacy_group_windows", _found(TableEnvironment._LEGACY_GW_RE),
+     lambda env, st: env._rewrite_legacy_group_windows(st.text)),
+    # TUMBLE / HOP / CUMULATE window TVFs
+    ("window_tvfs", _found(TableEnvironment._TVF_RE),
+     lambda env, st: env._rewrite_window_tvfs(st.text)),
+    # SQL:2016 JSON_TABLE FROM-items onto shredded temp views
+    ("json_table",
+     lambda env, st: _mod("functions.jsontable").JSON_TABLE_RE.search(
+         st.masked),
+     lambda env, st: _mod("functions.jsontable")
+     .rewrite_json_tables(env.spark, st.text)),
+    # dynamic table options `t /*+ OPTIONS('k'='v') */` (in a comment,
+    # so the gate reads the text)
+    ("options_hint", lambda env, st: _OPTIONS_HINT_RE.search(st.text),
+     lambda env, st: env._rewrite_options_hints(st.text)),
+)
+_UPTO = {name: i for i, (name, _g, _r) in enumerate(_REWRITES)}
+
+_OPTIONS_HINT_RE = re.compile(
+    r"(?P<tbl>[\w.]+)\s*/\*\+\s*OPTIONS\s*\((?P<opts>[^)]*)\)\s*\*/",
+    re.IGNORECASE,
+)
+_EXPLAIN_DETAIL = (
+    r"(?:ESTIMATED_COST|CHANGELOG_MODE|PLAN_ADVICE|JSON_EXECUTION_PLAN)"
+)
+_EXPLAIN_RE = re.compile(
+    rf"^\s*EXPLAIN\s+\(?\s*(?P<details>{_EXPLAIN_DETAIL}"
+    rf"(?:\s*,\s*{_EXPLAIN_DETAIL})*)\s*\)?\s+(?P<q>.+)$",
+    re.IGNORECASE | re.DOTALL,
+)
+
+
+# How many rewrites a handler sees: every entry before the named one.
+_FN = _UPTO["user_ptfs"]  # EXPLAIN, STATEMENT SET, function DDL
+_DDL = _UPTO["ml_predict"]  # table, catalog, module, connection, model DDL
+_MT = _UPTO["legacy_group_windows"]  # MATERIALIZED TABLE DDL
+_SW = _UPTO["json_table"]  # the SESSION window TVF
+_SEL = _UPTO["options_hint"]  # time travel, temporal/lateral join, MR
+_ALL = len(_REWRITES)
+
+#: The handlers in routing order: (rewrites, handler, kinds). A handler
+#: is a TableEnvironment method that answers NotImplemented for a
+#: statement that is not its shape; ``kinds`` are the leading keywords it
+#: serves (``QUERY`` for a query head). A statement tries its kind's
+#: handlers in this order; a kind without handlers, or whose handlers all
+#: decline, runs every rewrite and goes to spark.sql.
+_HANDLERS = (
+    (0, "_sql_jar", "ADD REMOVE SHOW"),
+    (0, "_sql_call", "CALL"),
+    (0, "_sql_show_procedures", "SHOW"),
+    (0, "_sql_show_tables", "SHOW"),
+    (0, "_sql_show_like", "SHOW"),
+    (0, "_sql_compile_plan", "COMPILE"),
+    (0, "_sql_execute_plan", "EXECUTE"),
+    (0, "_sql_delete", "DELETE"),
+    (0, "_sql_update", "UPDATE"),
+    (_FN, "_sql_explain", "EXPLAIN"),
+    (_FN, "_sql_statement_set", "EXECUTE"),
+    (_FN, "_function_statement", "CREATE ALTER DROP SHOW DESCRIBE DESC"),
+    (_DDL, "_alter_table_statement", "ALTER SHOW"),
+    (_DDL, "_sql_drop_table", "DROP"),
+    (_DDL, "_catalog_statement", "CREATE ALTER DROP SHOW USE DESCRIBE"),
+    (_DDL, "_sql_module", "LOAD UNLOAD USE SHOW"),
+    (_DDL, "_sql_connection", "CREATE ALTER DROP SHOW DESCRIBE DESC"),
+    (_DDL, "_sql_model", "CREATE ALTER DROP SHOW DESCRIBE DESC"),
+    (_MT, "_sql_materialized", "CREATE ALTER DROP SHOW"),
+    (_SW, "_sql_session_window", "QUERY"),
+    (_SEL, "_sql_time_travel", "QUERY"),
+    (_SEL, "_sql_temporal_join", "QUERY"),
+    (_SEL, "_sql_lateral_table", "QUERY"),
+    (_SEL, "_sql_match_recognize", "QUERY"),
+    (_ALL, "_sql_create_table", "CREATE"),
+    (_ALL, "_sql_set", "SET RESET"),
+    (_ALL, "_sql_job", "SHOW DESCRIBE STOP"),
+    (_ALL, "_sql_view", "CREATE ALTER DROP SHOW"),
+    (_ALL, "_sql_show_create_table", "SHOW"),
+    (_ALL, "_sql_truncate", "TRUNCATE"),
+    (_ALL, "_sql_analyze", "ANALYZE"),
+    (_ALL, "_sql_describe", "DESCRIBE DESC"),
+    (_ALL, "_sql_show_columns", "SHOW"),
+    (_ALL, "_sql_insert", "INSERT"),
+)
+#: kind -> ((rewrites, handler), ...), the lookup form of _HANDLERS
+_ROUTES: dict[str, list[tuple[int, str]]] = {}
+for _upto, _handler, _kinds in _HANDLERS:
+    for _kind in _kinds.split():
+        _ROUTES.setdefault(_kind, []).append((_upto, _handler))
 
 
 class StatementSet:

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flink_spark.sqltok import det_digest as _det_digest
+from flink_spark.sqltok import sub_outside_literals
 
 # name TYPE PATH '$.leaf'   |   name FOR ORDINALITY
 _COLSPEC_RE = re.compile(
@@ -128,3 +129,11 @@ def rewrite_json_table(spark, m) -> str:
     out.createOrReplaceTempView(name)
     alias = m.group("alias")
     return f"{name} AS {alias}" if alias else name
+
+
+def rewrite_json_tables(spark, stmt: str) -> str:
+    """Rewrite every JSON_TABLE FROM-item of ``stmt`` (matched outside
+    string literals) into its shredded temp view."""
+    return sub_outside_literals(
+        JSON_TABLE_RE, lambda m: rewrite_json_table(spark, m), stmt
+    )

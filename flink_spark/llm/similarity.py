@@ -594,13 +594,25 @@ def pq_topk(
         shortlist = 30 * k
     enc, _ = pq_encode(candidates, cand_id, vec, m, ks, seed, books=books,
                        train_limit=train_limit)
-    q = queries.select(query_id, F.col(vec).alias("__qv"))
+    # queries are keyed by a unique query_id (the search-API contract): a
+    # duplicate would multiply rows through both broadcast re-joins below,
+    # so it fails in-plan on the tiny query side (a window count, no
+    # driver-side job)
+    dup = F.col(query_id).isNotNull() & (
+        F.count(F.lit(1)).over(Window.partitionBy(query_id)) > 1
+    )
+    q = queries.select(
+        query_id,
+        F.when(dup, F.raise_error(F.concat(
+            F.lit("pq_topk: duplicate query_id "),
+            F.col(query_id).cast("string"),
+        ))).otherwise(F.col(vec)).alias("__qv"),
+    )
     # ADC-score in the scan stage and shuffle ONLY (query_id, cand_id,
     # __approx) into the shortlist window (guide §2.3): the old shape
     # carried __qv + __recon (two d-dim payloads) through the exchange
     # per candidate. The query vector is re-attached to the k·shortlist
-    # survivors by re-joining the (broadcast, tiny) query set — queries
-    # are keyed by a unique query_id, the search-API contract.
+    # survivors by re-joining the (broadcast, tiny) query set.
     approx = (
         F.broadcast(q)
         .crossJoin(enc.select(cand_id, "__recon"))

@@ -417,7 +417,7 @@ COLLECT_ALLOWLIST: dict = {
         (1, "public terminal action (Table#execute#collect parity)"),
     ("catalog.py", "_affected_partitions"):
         (1, "limit(_DML_PRUNE_MAX_PARTS + 1) — constant-bounded probe"),
-    ("catalog.py", "execute_sql"):
+    ("catalog.py", "_sql_show_tables"):
         (1, "SHOW TABLES metadata listing — bounded by table count"),
 }
 

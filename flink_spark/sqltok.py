@@ -1,18 +1,21 @@
 """String-literal-aware SQL text utilities for the dialect layer.
 
-The engine's Flink-SQL dialect (catalog.py) is keyword-gated: statements
-route to handlers when marker keywords appear, and two families (window
-TVFs, ML_PREDICT) REWRITE matched spans in place. Raw regex over the full
-statement text misroutes when a marker happens to live inside a string
-literal — ``SELECT 'use MODULE x'`` is a SELECT, not module DDL.
+The engine's Flink-SQL dialect (catalog.py) routes a statement in three
+steps: classify it once by its leading tokens on the literal-masked text
+(a kind, the query-head test and the INSERT head); apply the ordered table
+of in-place query-text rewrites (window TVFs, ML_PREDICT, GROUP_ID, ...)
+up to the prefix the kind's handler sees; dispatch through the table of
+per-kind handlers, falling through to ``spark.sql``. Raw regex over the
+full statement text misroutes when a marker happens to live inside a
+string literal — ``SELECT 'use MODULE x'`` is a SELECT, not module DDL.
 
 This module gives the dialect a literal-safe view of a statement without a
 full parser (the spike the roadmap called for; sqlglot is unavailable in
 this environment, and these three primitives cover the misroute class):
 
 - ``mask_literals``: same-length copy with the CONTENT of string
-  literals, quoted identifiers and comments blanked — keyword gates and
-  structural regexes run on the mask, and because lengths are identical
+  literals, quoted identifiers and comments blanked — the classification,
+  the rewrite gates and structural regexes run on the mask, and because lengths are identical
   every match span maps 1:1 onto the original text;
 - ``sub_outside_literals``: regex substitution that finds matches on the
   mask but lets the replacement read group text from the ORIGINAL (so

@@ -15,6 +15,7 @@ which is what lets the DuckDB oracle gate value-check *streaming* operators.
 
 from __future__ import annotations
 
+import contextlib
 import itertools
 import os
 
@@ -170,25 +171,13 @@ def run_to_memory(
     sdf: DataFrame, output_mode: str = "append", prefix: str = "fs_stream"
 ) -> DataFrame:
     """Run a streaming DataFrame to completion (AvailableNow) into a memory
-    sink; return the sink contents as a batch DataFrame.
-
-    State-partition sizing: the number of state-store instances is fixed at
-    query start from ``spark.sql.shuffle.partitions``, and each instance
-    pays per-batch snapshot/commit overhead — so streaming queries use
-    their own partition count (``SPARK_GRAFT_STREAM_SHUFFLE``, default 4
-    for local runs — A/B-measured ~25% faster than 8 at sf0.1; on a cluster set it ~1-2x total cores, it bounds both
-    state parallelism AND per-batch commit fan-out). The batch setting is
-    restored after the drain.
-    """
-    import os
+    sink under the streaming shuffle sizing (``stream_shuffle``); return
+    the sink contents as a batch DataFrame."""
     import shutil
     import tempfile
 
     spark = sdf.sparkSession
     name = f"{prefix}_{next(_COUNTER)}"
-    stream_shuffle = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "4")
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", stream_shuffle)
     # Explicit run-local checkpoint, deleted after the drain. Placed on
     # tmpfs when available (A/B-neutral vs page-cached /tmp locally, but
     # guarantees no disk churn). On a real cluster the checkpoint must be
@@ -199,19 +188,40 @@ def run_to_memory(
     )
     ckpt = tempfile.mkdtemp(prefix=f"flink_spark_ckpt_{name}_", dir=ckpt_root)
     try:
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with stream_shuffle(spark):
+            q = (
+                sdf.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
         shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
+
+
+@contextlib.contextmanager
+def stream_shuffle(spark: SparkSession):
+    """Streaming shuffle sizing for one drain: ``spark.sql.shuffle
+    .partitions`` is ``SPARK_GRAFT_STREAM_SHUFFLE`` (default 4) while the
+    body runs, and the batch setting is restored after. The number of
+    state-store instances is fixed at query start from that conf, and each
+    instance pays per-batch snapshot/commit overhead, so streaming queries
+    use their own partition count (4 for local runs: A/B-measured ~25%
+    faster than 8 at sf0.1; on a cluster set it ~1-2x total cores, it
+    bounds both state parallelism AND per-batch commit fan-out)."""
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "4"),
+    )
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
 
 
 def chunked_table_stream(
@@ -299,25 +309,6 @@ def chunked_table_stream(
             "ts", F.expr("CAST(timestamp_micros(ts DIV 1000) AS TIMESTAMP_NTZ)")
         )
     return df
-
-
-def run_files_in_batches(
-    spark: SparkSession,
-    dir_path: str,
-    schema,
-    transform,
-    output_mode: str = "append",
-    files_per_trigger: int = 1,
-    prefix: str = "fs_batched",
-) -> DataFrame:
-    """Stream a directory one file per micro-batch (watermark advances
-    between batches — the late-data test harness)."""
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(dir_path)
-    )
-    return run_to_memory(transform(src), output_mode, prefix)
 
 
 def with_current_watermark(

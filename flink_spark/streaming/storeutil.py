@@ -26,6 +26,8 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_spark.streaming.core import stream_shuffle
+
 BID = "__bid"
 
 #: Per-path memo of a store's READ schema (StructType, metadata only —
@@ -211,20 +213,14 @@ def prepare_root(prefix: str, root: str | None) -> tuple[str, bool]:
 def run_drain(stream: DataFrame, process, ckpt: str) -> None:
     """Drain ``stream`` to completion through ``process`` (a
     foreachBatch(batch, batch_id) callable) under the streaming shuffle
-    sizing (SPARK_GRAFT_STREAM_SHUFFLE — state-store instances are fixed
-    at query start from shuffle.partitions and each pays per-batch
-    commit overhead); the batch setting is restored after the drain.
+    sizing (``core.stream_shuffle``).
 
     (Measured and rejected, r13: disabling AQE inside the drain — the
     per-shuffle query-stage jobs looked like pure driver round-trip
     overhead at delta scale, but an interleaved same-process A/B over
     curation/delta-join-ttl/semantic-neardup measured no win outside
     box noise, so the conf stays at the session default.)"""
-    spark = stream.sparkSession
-    stream_shuffle = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "4")
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", stream_shuffle)
-    try:
+    with stream_shuffle(stream.sparkSession):
         q = (
             stream.writeStream.foreachBatch(process)
             .option("checkpointLocation", ckpt)
@@ -232,8 +228,6 @@ def run_drain(stream: DataFrame, process, ckpt: str) -> None:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
 
 
 def collect_out(

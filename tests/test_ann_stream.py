@@ -335,3 +335,87 @@ def test_ivf_empty_batch_after_training_leaves_store_identical(
     ]
     rows1 = sorted(map(tuple, idx1.topk(_queries(spark, sf_dir)).collect()))
     assert rows1 == rows0
+
+
+def test_pq_empty_batch_after_training_leaves_store_identical(
+    spark, sf_dir, tmp_path
+):
+    """PQ twin of the IVF empty-batch test: once the codebooks are
+    frozen, process() no longer probes emptiness and writes
+    unconditionally — an empty batch's dynamic-partition overwrite must
+    write NO partition and delete nothing: the store's committed files
+    and the search results are identical to the pre-batch state."""
+    import os
+
+    from flink_spark.streaming.ann_stream import pq_ingest_stream
+
+    src = tmp_path / "src"
+    src.mkdir()
+    root = str(tmp_path / "pq_root")
+    cands = _cands(spark, sf_dir)
+
+    def run_once():
+        stream = spark.readStream.schema(cands.schema).parquet(str(src))
+        return pq_ingest_stream(stream, root=root)
+
+    def store_files():
+        return sorted(
+            os.path.join(d, f)
+            for d, _dirs, fs in os.walk(f"{root}/codes")
+            for f in fs if f.endswith(".parquet")
+        )
+
+    _land(cands, tmp_path, src, "b0")
+    idx0 = run_once()
+    rows0 = sorted(map(tuple, idx0.topk(_queries(spark, sf_dir)).collect()))
+    files0 = store_files()
+    # drain an EMPTY batch against the trained root
+    _land(cands.filter(F.lit(False)), tmp_path, src, "b1")
+    idx1 = run_once()
+    assert store_files() == files0  # no new partition, nothing deleted
+    # and no stray flat file at the store root
+    assert not [
+        f for f in os.listdir(f"{root}/codes") if f.endswith(".parquet")
+    ]
+    rows1 = sorted(map(tuple, idx1.topk(_queries(spark, sf_dir)).collect()))
+    assert rows1 == rows0
+
+
+def _pq_vectors(spark, n: int, offset: int, id_col: str):
+    return spark.range(n).select(
+        (F.col("id") + offset).alias(id_col),
+        F.expr(
+            f"transform(sequence(0, 7), j -> sin((id + {offset}) * 1.7 "
+            f"+ j * 0.9) + cos(j * (id + {offset}) * 0.3))"
+        ).alias("embedding"),
+    )
+
+
+def test_pq_topk_unique_query_ids_rows_unchanged(spark):
+    """The duplicate-query_id guard leaves the result of unique ids
+    bit-identical: these rows were recorded before the guard existed."""
+    from flink_spark.llm.similarity import pq_topk
+
+    q = _pq_vectors(spark, 4, 0, "query_id")
+    c = _pq_vectors(spark, 40, 100, "cand_id")
+    got = sorted(map(tuple, pq_topk(q, c, k=3, m=4, ks=4).collect()))
+    assert got == [
+        (0, 104, 0.862024109061, 2), (0, 125, 0.688199187696, 3),
+        (0, 126, 0.948146671002, 1), (1, 104, 0.901736086864, 3),
+        (1, 122, 0.916904139087, 1), (1, 127, 0.909245817805, 2),
+        (2, 100, 0.650608482713, 3), (2, 124, 0.870840525748, 2),
+        (2, 128, 0.882247121916, 1), (3, 103, 0.717076746853, 3),
+        (3, 107, 0.959159862697, 1), (3, 129, 0.85024135384, 2),
+    ]
+
+
+def test_pq_topk_duplicate_query_id_raises(spark):
+    """A duplicated query_id would multiply rows through both broadcast
+    re-joins; it fails in the plan instead."""
+    from flink_spark.llm.similarity import pq_topk
+
+    q = _pq_vectors(spark, 4, 0, "query_id")
+    q = q.unionByName(q.filter(F.col("query_id") == 2))
+    c = _pq_vectors(spark, 40, 100, "cand_id")
+    with pytest.raises(Exception, match="duplicate query_id 2"):
+        pq_topk(q, c, k=3, m=4, ks=4).collect()

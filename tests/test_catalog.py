@@ -1662,6 +1662,64 @@ def test_compile_and_execute_plan_sql_statements(spark, sf_dir, tmp_path):
     env.execute_sql("DROP TABLE IF EXISTS cp_sink")
 
 
+@pytest.mark.parametrize("body", [
+    "VALUES (2, 'y')",
+    "(a, b) SELECT 3, 'z'",
+    "WITH c AS (SELECT 4 AS a, 'w' AS b) SELECT a, b FROM c",
+])
+def test_compile_plan_does_not_execute_its_insert(spark, tmp_path, body):
+    """COMPILE PLAN ... FOR INSERT compiles the INSERT's body (its schema
+    is the plan contract) and writes nothing; EXECUTE PLAN replays the
+    INSERT exactly once — for a Spark table and an engine table alike."""
+    env = TableEnvironment(spark)
+    spark.sql("DROP TABLE IF EXISTS cpx_spark")
+    spark.sql("CREATE TABLE cpx_spark (a INT, b STRING) USING parquet")
+    env.execute_sql("DROP TABLE IF EXISTS cpx_eng")
+    env.execute_sql(
+        "CREATE TABLE cpx_eng (a INT, b STRING) WITH ('connector'="
+        f"'filesystem', 'path'='{tmp_path}/cpx_eng', 'format'='parquet')"
+    )
+    try:
+        for t in ("cpx_spark", "cpx_eng"):
+            plan = str(tmp_path / f"{t}.plan.json")
+            env.execute_sql(f"COMPILE PLAN '{plan}' FOR INSERT INTO {t} {body}")
+            if t == "cpx_spark":
+                assert spark.table(t).count() == 0
+            else:  # sink-only until its first write
+                assert not spark.catalog.tableExists(t)
+            env.execute_sql(f"EXECUTE PLAN '{plan}'")
+            assert spark.table(t).count() == 1
+    finally:
+        spark.sql("DROP TABLE IF EXISTS cpx_spark")
+        env.execute_sql("DROP TABLE IF EXISTS cpx_eng")
+
+
+def test_compile_plan_partition_insert_and_non_query(spark, tmp_path):
+    """A PARTITION insert compiles against its body too, and a statement
+    that is neither an INSERT nor a query is refused, not executed."""
+    env = TableEnvironment(spark)
+    env.execute_sql("DROP TABLE IF EXISTS cpx_part")
+    env.execute_sql(
+        "CREATE TABLE cpx_part (a INT, p STRING) PARTITIONED BY (p) WITH ("
+        f"'connector'='filesystem', 'path'='{tmp_path}/cpx_part', "
+        "'format'='parquet')"
+    )
+    plan = str(tmp_path / "part.plan.json")
+    compiled = env.execute_sql(
+        f"COMPILE AND EXECUTE PLAN '{plan}' FOR "
+        "INSERT INTO cpx_part PARTITION (p = 'x') SELECT 7"
+    )
+    assert compiled is None
+    assert [tuple(r) for r in spark.table("cpx_part").collect()] == [(7, "x")]
+    with pytest.raises(ValueError, match="COMPILE PLAN"):
+        env.execute_sql(
+            f"COMPILE PLAN '{tmp_path}/ddl.plan.json' FOR "
+            "CREATE TABLE cpx_never (a INT) WITH ('connector'='blackhole')"
+        )
+    assert "cpx_never" not in env.tables
+    env.execute_sql("DROP TABLE IF EXISTS cpx_part")
+
+
 def test_show_like_patterns(spark, tmp_path):
     """SHOW <objects> [[NOT] (LIKE|ILIKE) 'pat'] (reference show.md):
     SQL-LIKE wildcard filtering over the base listing's name column."""
